@@ -131,7 +131,6 @@ def lsh_band_long(
     k: int = 8,
     rows_per_band: int = 2,
     carry_cols: tuple[str, ...] = (),
-    with_prefix: bool = False,
 ) -> DataFrame:
     """Band a MinHash signature and return the long-format LSH index:
     one row per (id, band_id, band_hash). This IS the structure a
@@ -142,14 +141,7 @@ def lsh_band_long(
 
     ``carry_cols``: extra per-id payload columns carried through the
     band explode (r14) so downstream pair expansion can emit them
-    without re-joining the signature frame per side.
-
-    ``with_prefix`` (r14): additionally emit ``__prefix`` — the band
-    hashes of the EARLIER bands (``[b0..b{band_id-1}]``, empty for band
-    0). Two ids in one bucket co-occur in an earlier band iff their
-    prefixes match at some position, which is what lets
-    ``lsh_candidate_pairs(first_band_dedup=True)`` drop its cross-band
-    distinct shuffle."""
+    without re-joining the signature frame per side."""
     n_bands = k // rows_per_band
     bands = [
         F.md5(
@@ -160,15 +152,11 @@ def lsh_band_long(
         for b in range(n_bands)
     ]
     banded = signatures.select(F.col(id_col), *[F.col(c) for c in carry_cols], *bands)
-    long = banded.select(
+    return banded.select(
         F.col(id_col),
         *[F.col(c) for c in carry_cols],
-        *([F.array(*[F.col(f"b{b}") for b in range(n_bands)]).alias("__bands")] if with_prefix else []),
         F.posexplode(F.array(*[F.col(f"b{b}") for b in range(n_bands)])).alias("band_id", "band_hash"),
     )
-    if with_prefix:
-        long = long.withColumn("__prefix", F.slice("__bands", 1, F.col("band_id"))).drop("__bands")
-    return long
 
 
 def lsh_probe_candidates(
@@ -204,7 +192,6 @@ def lsh_candidate_pairs(
     rows_per_band: int = 2,
     max_bucket: int | None = None,
     carry_cols: tuple[str, ...] = (),
-    first_band_dedup: bool = False,
 ) -> DataFrame:
     """Band the signature (b = k/rows_per_band bands), hash each band,
     group ids per (band_id, band_hash) bucket, and expand pairs WITHIN
@@ -229,62 +216,16 @@ def lsh_candidate_pairs(
     upstream shingle pipeline per join side. Carried values must be
     deterministic per id (they are deduped with a per-pair max).
 
-    ``first_band_dedup`` (r14, guide §2.4): a pair that matches in
-    several bands is emitted by several buckets, which is why the
-    default shape ends in a pair-keyed dedup shuffle (distinct /
-    groupBy). Instead, carry each id's EARLIER band hashes through the
-    bucket (``lsh_band_long(with_prefix=True)``) and emit a pair only
-    from the FIRST band where its members' hashes agree — exactly one
-    emission per distinct pair, so the plan ends at the bucket
-    expansion: 3 shuffles → 2, and the (candidate-pair-volume) dedup
-    exchange is gone. Equivalence is exact: membership tests compare
-    the same md5 band hashes the buckets group on.
-
-    Measured trade (tools/bench_lsh_pairs_ab.py, r14): the prefix adds
-    ~1.5 md5 strings per band row (~2× the bytes of the bucket
-    exchange), while the distinct it removes shuffles only candidate
-    PAIRS — so on the bench corpus (low duplicate rate, tiny candidate
-    set) the default wins (x10 ABBA 1.448 vs 1.629 s; sf0.1 flat) and
-    the declared queries keep it. The first-band form is for corpora
-    whose candidate volume rivals the band-long stream (mass-duplicated
-    content), where the removed shuffle is the dominant term.
+    A pair that matches in several bands is emitted by several buckets,
+    so the plan ends in a pair-keyed dedup shuffle (distinct / groupBy).
+    That shuffle moves only the LSH-bounded candidate pairs; carrying
+    each id's earlier band hashes to emit a pair from its first band
+    only was measured slower (r14: x10 ABBA 1.448 vs 1.629 s, sf0.1
+    flat) because it ~doubles the bytes of the bucket exchange.
     """
     long = lsh_band_long(
-        signatures,
-        id_col,
-        k=k,
-        rows_per_band=rows_per_band,
-        carry_cols=carry_cols,
-        with_prefix=first_band_dedup,
+        signatures, id_col, k=k, rows_per_band=rows_per_band, carry_cols=carry_cols
     )
-    if first_band_dedup:
-        member = F.struct(
-            F.col(id_col), *[F.col(c) for c in carry_cols], F.col("__prefix")
-        )
-        buckets = (
-            long.groupBy("band_id", "band_hash")
-            .agg(F.array_sort(F.collect_set(member)).alias("ms"))
-            .filter(F.size("ms") > 1)
-        )
-        if max_bucket is not None:
-            buckets = buckets.filter(F.size("ms") <= max_bucket)
-        lefts = buckets.select(F.posexplode("ms").alias("i", "m1"), F.col("ms"))
-        pairs = lefts.select(
-            "m1",
-            F.explode(F.slice(F.col("ms"), F.col("i") + 2, F.size("ms"))).alias("m2"),
-        )
-        # keep the pair only where no earlier band already bucketed it
-        # (both prefixes have length band_id, so the zip is aligned)
-        zipped = F.arrays_zip(
-            F.col("m1.__prefix").alias("p1"), F.col("m2.__prefix").alias("p2")
-        )
-        first_here = ~F.exists(zipped, lambda x: x["p1"] == x["p2"])
-        return pairs.filter(first_here).select(
-            F.col(f"m1.{id_col}").alias("doc1"),
-            F.col(f"m2.{id_col}").alias("doc2"),
-            *[F.col(f"m1.{c}").alias(f"{c}_1") for c in carry_cols],
-            *[F.col(f"m2.{c}").alias(f"{c}_2") for c in carry_cols],
-        )
     if carry_cols:
         member = F.struct(F.col(id_col), *[F.col(c) for c in carry_cols])
         buckets = (
@@ -408,10 +349,12 @@ def jaccard_pairs(
     result-identical two-stage expansion: ids aggregate per (shingle,
     salt) with salt = hash(id) mod m, so no bucket row holds more than
     ~k/m ids; same-salt pairs expand in-array as before, cross-salt
-    pairs come from salt-block pairs (a round-robin repartition spreads
-    a hot shingle's m·(m−1)/2 block rows across tasks before the
-    quadratic expansion), bounding per-task work and per-row memory at
-    ~(k/m)². Every co-occurrence is emitted exactly once (same-salt
+    pairs come from salt-block pairs (a hash repartition on
+    (shingle[, block], salt₁, salt₂) spreads a hot shingle's m·(m−1)/2
+    block rows across tasks before the quadratic expansion). Per-row
+    memory is bounded at ~(k/m)²; per-task work is bounded only in
+    expectation, since hash placement can still put several block rows
+    on one task. Every co-occurrence is emitted exactly once (same-salt
     in-array, cross-salt from the single (salt₁<salt₂) block), so
     counts are unchanged — verified by exceptAll in
     tests/test_properties.py. Costs one extra shuffle of the salted

@@ -408,16 +408,7 @@ def docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def docs_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash (k=8) + LSH (4 bands × 2 rows) candidate duplicate
-    pairs over word-3-gram shingles.
-
-    r14 counter-measurement: ``first_band_dedup=True`` (emit each pair
-    from its first matching band, dropping the cross-band distinct —
-    3 shuffles → 2) was measured SLOWER at both scales (x10 ABBA 1.448
-    → 1.629 s, sf0.1 flat; tools/bench_lsh_pairs_ab.py): the distinct
-    only shuffles the tiny LSH-bounded candidate set while the band-
-    hash prefix carry ~doubles the bytes of the big bucket exchange.
-    Kept on the r13 shape; see lsh_candidate_pairs for when the
-    first-band form wins."""
+    pairs over word-3-gram shingles."""
     docs = load_table(spark, sf_dir, "documents")
     # distinct=False: MinHash's min-agg is multiplicity-insensitive, so
     # the dedup shuffle of the exploded shingles would be pure overhead
@@ -3177,12 +3168,15 @@ def _semantic_neardup_plan(spark: SparkSession, sf_dir: str, n_cents: int) -> Da
     from an inner pairs⋈shingles⋈shingles aggregate and then LEFT-join
     it BACK onto `pairs` plus two sizes joins — the IVF+cosine pair
     subtree appeared twice and the shingle set four times (20
-    exchanges / 16 scans analyzed). Now the shingle sides LEFT-join so
+    exchanges / 16 scans analyzed). Now the b shingle side LEFT-joins so
     every pair row survives the single aggregate (`inter` = matched
     b-rows, `n1` = the group's own a-side row count — sh is distinct
     per doc, so that IS |sh(id1)|), leaving one sizes join for n2:
     pairs referenced once, 4 joins → 3, 19 → 13 bench-profile
-    exchanges. Measured (tools/bench_semantic_ab.py, ABBA, exceptAll 0
+    exchanges. The a-side join is INNER like the sizes join, so a pair
+    drops when either id has no shingle rows (no documents row), as in
+    the oracle's two sizes joins; a NULL text keeps its one NULL
+    shingle row, so its pairs survive with jaccard 0. Measured (tools/bench_semantic_ab.py, ABBA, exceptAll 0
     both gates at both scales): sf0.1 2.638→2.244 s (8-cent) /
     2.352→2.241 s (64); x10 23.45→21.76 s for the at-scale 64-bucket
     gate; the 8-bucket gate's x10 medians (181.9 vs 195.8 s) overlap
@@ -3205,7 +3199,7 @@ def _semantic_neardup_plan(spark: SparkSession, sf_dir: str, n_cents: int) -> Da
     a = sh.select(F.col("doc_id").alias("id1"), F.col("shingle").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id2b"), F.col("shingle").alias("sh_b"))
     g = (
-        pairs.join(a, "id1", "left")
+        pairs.join(a, "id1")
         .join(b, (F.col("id2") == F.col("id2b")) & (F.col("sh_b") == F.col("sh_a")), "left")
         .drop("id2b")
         .groupBy("id1", "id2")

@@ -46,7 +46,7 @@ import re
 import shutil
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1035,6 +1035,54 @@ class VersionedTable:
         self._advance_pointer(base_version + 1)
         self._maybe_write_ckpt(base_version + 1)
 
+    def _commit_patch(
+        self, name: str, mutate: Callable[[int, dict], dict | None], max_retries: int
+    ) -> int:
+        """The one commit loop of the metadata operations (ALTERs,
+        restore, add_bloom_index). Each attempt calls ``mutate(base, m)``
+        on the head manifest, so validation re-runs against the new head
+        after a lost race. ``mutate`` returns None for a no-op, or a
+        patch: ``op`` plus the ``_try_commit`` keywords that change.
+        Everything else carries forward from ``m``: file list,
+        clustering, schema, stats sidecar by reference (legacy inline
+        stats are rewritten to one) and the DV map, with a ``"none"``
+        change record. A patch's ``bloom_rows`` become a new bloom
+        sidecar, unlinked again if the commit loses its race."""
+        for _ in range(max_retries):
+            base = self.version()
+            if base == 0:
+                raise ValueError(f"{name} target does not exist; create() it first")
+            m = self._read_manifest(base)
+            patch = mutate(base, m)
+            if patch is None:
+                return base
+            op = patch.pop("op")
+            files = patch.pop("files", list(m["files"]))
+            kw: dict = {
+                "cluster_by": m.get("cluster_by") or None,
+                "schema_json": m.get("schema"),
+                "dvs": {f: list(v) for f, v in (m.get("dvs") or {}).items()},
+                "cdf": {"mode": "none"},
+            }
+            if "stats" not in patch:
+                kw["stats"] = None if m.get("stats_file") else (m.get("stats") or None)
+                kw["stats_file_ref"] = m.get("stats_file")
+            written = None
+            if "bloom_rows" in patch:
+                written = self._write_bloom_sidecar(patch.pop("bloom_rows"), base + 1)
+                patch["bloom_file_ref"] = written
+            kw.update(patch)
+            try:
+                self._try_commit(base, files, op, **kw)
+                return base + 1
+            except CommitConflict:
+                if written:
+                    try:
+                        os.unlink(os.path.join(self._log, written))
+                    except OSError:
+                        pass
+        raise CommitConflict(f"{name} on {self.root} gave up after {max_retries} conflicts")
+
     def _write_stats_sidecar(self, name: str, stats: dict) -> None:
         """One row per (file, column): JSON-encoded lo/hi preserve the
         canonicalized type (int/float/str) across the parquet round
@@ -1477,11 +1525,8 @@ class VersionedTable:
 
         cols = list(dict.fromkeys(cols))
         allowed = {"tinyint", "smallint", "int", "bigint", "string"}
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("add_bloom_index target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict | None:
             schema = StructType.fromJson(json.loads(m["schema"]))
             types = {f.name: f.dataType.simpleString() for f in schema.fields}
             for c in cols:
@@ -1498,7 +1543,7 @@ class VersionedTable:
             }
             build_files = sorted(set().union(*missing.values()))
             if not build_files and m.get("bloom_file"):
-                return base  # every (file, col) already indexed — no-op
+                return None  # every (file, col) already indexed — no-op
             new_rows = None
             if build_files:
                 df = self._read_data(m, build_files, with_file=True)
@@ -1556,31 +1601,10 @@ class VersionedTable:
                         carry = carry.join(F.broadcast(pairs), ["file", "col"], "left_anti")
             out = new_rows if carry is None else (carry if new_rows is None else carry.unionAll(new_rows))
             if out is None:
-                return base  # nothing to index and nothing carried
-            name = self._write_bloom_sidecar(out, base + 1)
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"index:bloom:{','.join(cols)}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    bloom_file_ref=name,
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                try:
-                    os.unlink(os.path.join(self._log, name))
-                except OSError:
-                    pass
-                continue
-        raise CommitConflict(
-            f"add_bloom_index on {self.root} gave up after {max_retries} conflicts"
-        )
+                return None  # nothing to index and nothing carried
+            return {"op": f"index:bloom:{','.join(cols)}", "bloom_rows": out}
+
+        return self._commit_patch("add_bloom_index", mutate, max_retries)
 
     def scan(
         self,
@@ -2935,58 +2959,52 @@ class VersionedTable:
         forward from the CURRENT head (not the restore point): a
         replayed micro-batch that was applied before the incident must
         still be recognized as applied after it."""
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("restore target does not exist; create() it first")
+
+        def mutate(base: int, head: dict) -> dict:
             if not 1 <= version <= base:
                 raise ValueError(f"cannot restore to v{version}; table is at v{base}")
             m = self._read_manifest(version)
-            head_ids = self._read_manifest(base).get("identity") or {}
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"restore:{version}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    # the restored state's column mapping, not the
-                    # current head's (a restore across a rename must
-                    # bring the old logical names back)
-                    col_map=m.get("col_map") or {},
-                    retired=m.get("retired_cols") or [],
-                    # the restored version's constraints, not the current
-                    # head's (Delta's restore-metadata semantics): a
-                    # constraint added AFTER the restore point may
-                    # reference columns the restored schema lacks, and
-                    # inheriting it would make every later write fail
-                    # with an unresolved-column error; the restored rows
-                    # were validated against the restored constraints
-                    # when first committed
-                    constraints=m.get("constraints") or {},
-                    # likewise the restored version's bloom sidecar —
-                    # its entries match the restored file list
-                    bloom_file_ref=m.get("bloom_file"),
-                    # and its generated-column declarations (same
-                    # reasoning as constraints: a later declaration may
-                    # reference columns the restored schema lacks)
-                    generated=m.get("generated") or {},
-                    # identity DECLARATIONS restore with the schema,
-                    # but each WATERMARK is floored at the current
-                    # head's — ids assigned after the restore point
-                    # must never be reissued (the txn-map reasoning)
-                    identity={
-                        n: max(int(wm), int((head_ids or {}).get(n, 0)))
-                        for n, wm in (m.get("identity") or {}).items()
-                    },
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"restore on {self.root} gave up after {max_retries} conflicts")
+            return {
+                "op": f"restore:{version}",
+                "files": list(m["files"]),
+                "cluster_by": m.get("cluster_by") or None,
+                "schema_json": m.get("schema"),
+                "stats": None if m.get("stats_file") else (m.get("stats") or None),
+                "stats_file_ref": m.get("stats_file"),
+                "dvs": {f: list(v) for f, v in (m.get("dvs") or {}).items()},
+                # the restored state's column mapping, not the
+                # current head's (a restore across a rename must
+                # bring the old logical names back)
+                "col_map": m.get("col_map") or {},
+                "retired": m.get("retired_cols") or [],
+                # the restored version's constraints, not the current
+                # head's (Delta's restore-metadata semantics): a
+                # constraint added AFTER the restore point may
+                # reference columns the restored schema lacks, and
+                # inheriting it would make every later write fail
+                # with an unresolved-column error; the restored rows
+                # were validated against the restored constraints
+                # when first committed
+                "constraints": m.get("constraints") or {},
+                # likewise the restored version's bloom sidecar —
+                # its entries match the restored file list
+                "bloom_file_ref": m.get("bloom_file"),
+                # and its generated-column declarations (same
+                # reasoning as constraints: a later declaration may
+                # reference columns the restored schema lacks)
+                "generated": m.get("generated") or {},
+                # identity DECLARATIONS restore with the schema,
+                # but each WATERMARK is floored at the current
+                # head's — ids assigned after the restore point
+                # must never be reissued (the txn-map reasoning)
+                "identity": {
+                    n: max(int(wm), int((head.get("identity") or {}).get(n, 0)))
+                    for n, wm in (m.get("identity") or {}).items()
+                },
+                "cdf": {"mode": "derive"},  # changes() derives across a restore
+            }
+
+        return self._commit_patch("restore", mutate, max_retries)
 
     def add_constraint(self, name: str, expr: str, max_retries: int = 5) -> int:
         """ALTER TABLE ... ADD CONSTRAINT ... CHECK (expr): from this
@@ -2997,11 +3015,8 @@ class VersionedTable:
         (unknown) passes. Like Delta, the EXISTING data must already
         satisfy the constraint or this raises. One manifest commit;
         no data moves."""
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("add_constraint target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict:
             cons = dict(m.get("constraints") or {})
             if name in cons:
                 raise ValueError(f"constraint {name!r} already exists")
@@ -3011,56 +3026,21 @@ class VersionedTable:
                     f"existing rows violate CHECK {name!r} ({expr}) on {self.root}"
                 )
             cons[name] = expr
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:constraint:{name}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    constraints=cons,
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"add_constraint on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {"op": f"alter:constraint:{name}", "constraints": cons}
+
+        return self._commit_patch("add_constraint", mutate, max_retries)
 
     def drop_constraint(self, name: str, max_retries: int = 5) -> int:
         """Remove a CHECK constraint (manifest-only commit)."""
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("drop_constraint target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict:
             cons = dict(m.get("constraints") or {})
             if name not in cons:
                 raise ValueError(f"no such constraint {name!r} (have {sorted(cons)})")
             del cons[name]
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:unconstraint:{name}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    constraints=cons,
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"drop_constraint on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {"op": f"alter:unconstraint:{name}", "constraints": cons}
+
+        return self._commit_patch("drop_constraint", mutate, max_retries)
 
     def set_generated(self, name: str, expr: str, max_retries: int = 5) -> int:
         """Declare an EXISTING column as GENERATED ALWAYS AS (expr) —
@@ -3077,11 +3057,8 @@ class VersionedTable:
         result to the (possibly widened) declared type (pinned in
         TestGeneratedColumns.test_alter_guards_and_drop_generated).
         One manifest commit; no data moves."""
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("set_generated target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict:
             gen = dict(m.get("generated") or {})
             if name in gen:
                 raise ValueError(f"column {name!r} is already generated")
@@ -3094,57 +3071,22 @@ class VersionedTable:
                     f"existing rows contradict GENERATED {name!r} AS ({expr}) on {self.root}"
                 )
             gen[name] = expr
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:generated:{name}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    generated=gen,
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"set_generated on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {"op": f"alter:generated:{name}", "generated": gen}
+
+        return self._commit_patch("set_generated", mutate, max_retries)
 
     def drop_generated(self, name: str, max_retries: int = 5) -> int:
         """Remove a generated-column declaration (the column and its
         values stay; writers stop computing/validating it)."""
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("drop_generated target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict:
             gen = dict(m.get("generated") or {})
             if name not in gen:
                 raise ValueError(f"no generated column {name!r} (have {sorted(gen)})")
             del gen[name]
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:drop_generated:{name}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    generated=gen,
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"drop_generated on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {"op": f"alter:drop_generated:{name}", "generated": gen}
+
+        return self._commit_patch("drop_generated", mutate, max_retries)
 
     def set_identity(self, name: str, max_retries: int = 5) -> int:
         """Declare an EXISTING integral column as GENERATED ALWAYS AS
@@ -3171,11 +3113,7 @@ class VersionedTable:
         the one full pass, same as add_constraint."""
         from pyspark.sql.types import StructType
 
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("set_identity target does not exist; create() it first")
-            m = self._read_manifest(base)
+        def mutate(base: int, m: dict) -> dict:
             ids = dict(m.get("identity") or {})
             if name in ids:
                 raise ValueError(f"column {name!r} is already an identity column")
@@ -3208,25 +3146,9 @@ class VersionedTable:
                     f"existing {name!r} values are not unique on {self.root}"
                 )
             ids[name] = int(agg["mx"]) if agg["mx"] is not None else 0
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:identity:{name}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    identity=ids,
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"set_identity on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {"op": f"alter:identity:{name}", "identity": ids}
+
+        return self._commit_patch("set_identity", mutate, max_retries)
 
     def set_cdf(self, enabled: bool, max_retries: int = 5) -> int:
         """Toggle the commit-time change feed (Delta's
@@ -3238,32 +3160,14 @@ class VersionedTable:
         (correct, just the pre-r12 cost). Re-enabling takes effect on
         the NEXT commit; ranges spanning the off window keep deriving,
         exactly like Delta's property."""
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("set_cdf target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict | None:
             if bool(m.get("cdf_enabled", True)) == bool(enabled):
-                return base  # already in the requested state
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:cdf:{'on' if enabled else 'off'}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    cdf={"mode": "none"},
-                    cdf_enabled=bool(enabled),
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"set_cdf on {self.root} gave up after {max_retries} conflicts"
-        )
+                return None  # already in the requested state
+            op = f"alter:cdf:{'on' if enabled else 'off'}"
+            return {"op": op, "cdf_enabled": bool(enabled)}
+
+        return self._commit_patch("set_cdf", mutate, max_retries)
 
     def record_txn(
         self, txn_app: str, txn_version: int, max_retries: int = 5
@@ -3279,66 +3183,27 @@ class VersionedTable:
         No-op (no commit) when the app's cursor already stands at or
         past ``txn_version``. Returns the committed (or unchanged)
         version."""
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("record_txn target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict | None:
             seen = (m.get("txns") or {}).get(txn_app)
             if seen is not None and int(seen[0]) >= int(txn_version):
-                return base  # cursor already there
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    "txn",
-                    m.get("cluster_by") or None,
-                    txn_app,
-                    int(txn_version),
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"record_txn on {self.root} gave up after {max_retries} conflicts"
-        )
+                return None  # cursor already there
+            return {"op": "txn", "txn_app": txn_app, "txn_version": int(txn_version)}
+
+        return self._commit_patch("record_txn", mutate, max_retries)
 
     def drop_identity(self, name: str, max_retries: int = 5) -> int:
         """Remove an identity declaration (the column and its values
         stay; writers stop assigning and sources may carry it again)."""
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("drop_identity target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict:
             ids = dict(m.get("identity") or {})
             if name not in ids:
                 raise ValueError(f"no identity column {name!r} (have {sorted(ids)})")
             del ids[name]
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:drop_identity:{name}",
-                    m.get("cluster_by") or None,
-                    schema_json=m.get("schema"),
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    identity=ids,
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"drop_identity on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {"op": f"alter:drop_identity:{name}", "identity": ids}
+
+        return self._commit_patch("drop_identity", mutate, max_retries)
 
     def _assign_identity(
         self,
@@ -3452,11 +3317,7 @@ class VersionedTable:
         names back. Returns the committed version."""
         from pyspark.sql.types import StructField, StructType
 
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("rename_column target does not exist; create() it first")
-            m = self._read_manifest(base)
+        def mutate(base: int, m: dict) -> dict:
             schema = StructType.fromJson(json.loads(m["schema"]))
             names = [f.name for f in schema.fields]
             if old not in names:
@@ -3493,6 +3354,14 @@ class VersionedTable:
                 f: {(new if c == old else c): v for c, v in fs.items()}
                 for f, fs in self._stats_of(m).items()
             }
+            patch = {
+                "op": f"alter:rename:{old}->{new}",
+                "cluster_by": cluster_by,
+                "schema_json": new_schema,
+                "stats": stats or None,
+                "col_map": cmap,
+                "cdf": {"mode": "derive"},  # changes() derives across a rename
+            }
             # bloom entries are keyed by LOGICAL column name and the
             # underlying values do not change on rename — re-key the
             # sidecar so point-lookup skipping keeps working under the
@@ -3500,35 +3369,13 @@ class VersionedTable:
             bloom_ref = m.get("bloom_file")
             if bloom_ref and old in self._bloom_of(m):
                 bdf = self.spark.read.parquet(os.path.join(self._log, bloom_ref))
-                bdf = bdf.withColumn(
+                patch["bloom_rows"] = bdf.withColumn(
                     "col",
                     F.when(F.col("col") == old, F.lit(new)).otherwise(F.col("col")),
                 )
-                bloom_ref = self._write_bloom_sidecar(bdf, base + 1)
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:rename:{old}->{new}",
-                    cluster_by,
-                    schema_json=new_schema,
-                    stats=stats or None,
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    col_map=cmap,
-                    retired=list(m.get("retired_cols") or []),
-                    bloom_file_ref=bloom_ref,
-                )
-                return base + 1
-            except CommitConflict:
-                if bloom_ref and bloom_ref != m.get("bloom_file"):
-                    try:
-                        os.unlink(os.path.join(self._log, bloom_ref))
-                    except OSError:
-                        pass
-                continue
-        raise CommitConflict(
-            f"rename_column on {self.root} gave up after {max_retries} conflicts"
-        )
+            return patch
+
+        return self._commit_patch("rename_column", mutate, max_retries)
 
     def add_column(self, name: str, dtype: str, max_retries: int = 5) -> int:
         """ALTER TABLE ... ADD COLUMN (nullable, manifest-only): the
@@ -3540,11 +3387,7 @@ class VersionedTable:
         ("bigint", "string", ...)."""
         from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("add_column target does not exist; create() it first")
-            m = self._read_manifest(base)
+        def mutate(base: int, m: dict) -> dict:
             schema = StructType.fromJson(json.loads(m["schema"]))
             if name in [f.name for f in schema.fields]:
                 raise ValueError(f"column {name!r} already exists")
@@ -3562,24 +3405,9 @@ class VersionedTable:
             new_schema = StructType(
                 list(schema.fields) + [StructField(name, _parse_datatype_string(dtype), True)]
             ).json()
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:add:{name}",
-                    m.get("cluster_by") or None,
-                    schema_json=new_schema,
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"add_column on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {"op": f"alter:add:{name}", "schema_json": new_schema}
+
+        return self._commit_patch("add_column", mutate, max_retries)
 
     #: value-preserving type widenings (Delta type widening): narrower
     #: physical files stay as-is; Spark 4's vectorized parquet reader
@@ -3611,11 +3439,8 @@ class VersionedTable:
         from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
         target = _parse_datatype_string(new_type)
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("widen_column target does not exist; create() it first")
-            m = self._read_manifest(base)
+
+        def mutate(base: int, m: dict) -> dict | None:
             # widening deliberately SKIPS _guard_constraint_refs (unlike
             # rename/drop): it is value-preserving, so a CHECK expression
             # keeps evaluating identically and a GENERATED expression
@@ -3643,7 +3468,7 @@ class VersionedTable:
                 )
             cur = field.dataType.simpleString()
             if target.simpleString() == cur:
-                return base
+                return None
             if target.simpleString() not in self._WIDENINGS.get(cur, ()):
                 raise ValueError(
                     f"cannot alter {name!r} from {cur} to {target.simpleString()}: only "
@@ -3656,24 +3481,12 @@ class VersionedTable:
                     for f in schema.fields
                 ]
             ).json()
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:widen:{name}:{cur}->{target.simpleString()}",
-                    m.get("cluster_by") or None,
-                    schema_json=new_schema,
-                    stats=None if m.get("stats_file") else (m.get("stats") or None),
-                    stats_file_ref=m.get("stats_file"),
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"widen_column on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {
+                "op": f"alter:widen:{name}:{cur}->{target.simpleString()}",
+                "schema_json": new_schema,
+            }
+
+        return self._commit_patch("widen_column", mutate, max_retries)
 
     def drop_column(self, name: str, max_retries: int = 5) -> int:
         """ALTER TABLE ... DROP COLUMN without rewrites: the column
@@ -3686,11 +3499,7 @@ class VersionedTable:
         before the drop still sees the column."""
         from pyspark.sql.types import StructType
 
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("drop_column target does not exist; create() it first")
-            m = self._read_manifest(base)
+        def mutate(base: int, m: dict) -> dict:
             schema = StructType.fromJson(json.loads(m["schema"]))
             names = [f.name for f in schema.fields]
             if name not in names:
@@ -3709,25 +3518,15 @@ class VersionedTable:
                 for f, fs in self._stats_of(m).items()
             }
             stats = {f: fs for f, fs in stats.items() if fs}
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]),
-                    f"alter:drop:{name}",
-                    m.get("cluster_by") or None,
-                    schema_json=new_schema,
-                    stats=stats or None,
-                    dvs={f: list(v) for f, v in (m.get("dvs") or {}).items()},
-                    col_map=cmap,
-                    retired=retired,
-                    cdf={"mode": "none"},
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"drop_column on {self.root} gave up after {max_retries} conflicts"
-        )
+            return {
+                "op": f"alter:drop:{name}",
+                "schema_json": new_schema,
+                "stats": stats or None,
+                "col_map": cmap,
+                "retired": retired,
+            }
+
+        return self._commit_patch("drop_column", mutate, max_retries)
 
     def delete_where(
         self,

@@ -113,6 +113,18 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say how many SLOW tests the default `-m "not slow"` left out."""
+    slow = [
+        i for i in terminalreporter.stats.get("deselected", []) if i.get_closest_marker("slow")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f'{len(slow)} slow tests deselected by -m "not slow"; full sweep: '
+            'python -m pytest tests/ -q -m "slow or not slow"'
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("iotdatapipeline-tests", shuffle_partitions=4)

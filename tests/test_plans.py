@@ -515,3 +515,67 @@ class TestPropsShredded:
         roots = os.listdir("/tmp/sparkgraft_shredded")
         assert len(roots) == 1
         assert VersionedTable(spark, f"/tmp/sparkgraft_shredded/{roots[0]}").version() == 1
+
+
+class TestSemanticNeardupEdges:
+    def test_shingleless_ids_drop_on_both_sides(self, spark, tmp_path):
+        """docs_semantic_neardup on a fixture where one IVF bucket holds
+        every candidate pair and some ids have no documents row (no
+        shingles) on the id1 side, the id2 side, or both. Pairs touching
+        such an id drop whichever side it is on, as in the DuckDB
+        oracle's two sizes joins; empty and NULL texts keep their pairs."""
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from iotdatapipeline_spark.plans.analytics import (
+            _semantic_neardup_plan,
+            _semantic_neardup_sql,
+        )
+
+        # vec_id < 8 are the IVF centroids: 8 far-apart axis directions;
+        # ids 8..15 sit near centroid 0, so bucket 0 = {0, 8..15}
+        axes = [[0.0] * 4 for _ in range(8)]
+        for i in range(8):
+            axes[i][i // 2] = 1.0 if i % 2 == 0 else -1.0
+        vecs = axes + [[1.0, 0.01 * i, 0.02 * (i % 3), 0.0] for i in range(1, 9)]
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(range(16), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([0] * 16, pa.int32()),
+            }),
+            tmp_path / "embeddings.parquet",
+        )
+        texts = {i: f"the quick brown fox jumps over dog {i % 3}" for i in range(16)}
+        for missing in (0, 11, 15):  # smallest, middle and largest bucket id
+            del texts[missing]
+        texts[9] = ""
+        texts[10] = None
+        ids = sorted(texts)
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(ids, pa.int64()),
+                "text": pa.array([texts[i] for i in ids], pa.string()),
+                "lang": pa.array(["en"] * len(ids)),
+                "source": pa.array(["web"] * len(ids)),
+                "n_chars": pa.array([len(texts[i] or "") for i in ids], pa.int64()),
+            }),
+            tmp_path / "documents.parquet",
+        )
+
+        cols = ("id1", "id2", "jaccard_x1000", "lexical_confirmed")
+        got = {
+            tuple(r)
+            for r in _semantic_neardup_plan(spark, str(tmp_path), 8).select(*cols).collect()
+        }
+        con = duckdb.connect()
+        for t in ("embeddings", "documents"):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path / t}.parquet'")
+        sel = ", ".join(cols)
+        want = set(con.sql(f"SELECT {sel} FROM ({_semantic_neardup_sql(8)})").fetchall())
+
+        assert want and got == want
+        touched = {i for pair in got for i in pair[:2]}
+        assert not touched & {0, 11, 15}
+        assert {9, 10} <= touched

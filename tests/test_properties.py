@@ -242,38 +242,6 @@ class TestSaltedJaccard:
         assert plain.exceptAll(salted).count() == 0
 
 
-class TestFirstBandDedup:
-    def test_first_band_emission_matches_distinct(self, spark):
-        """r14: lsh_candidate_pairs(first_band_dedup=True) must emit
-        exactly the distinct pair set of the default cross-band
-        distinct shape — duplicates planted so pairs co-occur in
-        several bands."""
-        import random
-
-        from iotdatapipeline_spark.analytics.dedup import (
-            lsh_candidate_pairs,
-            minhash_signatures,
-            shingle_set,
-        )
-
-        rng = random.Random(11)
-        vocab = [f"w{i}" for i in range(30)]
-        texts = [" ".join(rng.choices(vocab, k=rng.randint(5, 25))) for _ in range(80)]
-        # exact duplicates co-occur in all 4 bands: the worst case for
-        # multi-band emission
-        texts += [texts[0], texts[0], texts[1], texts[2] + " tail tail tail"]
-        docs = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
-        )
-        sh = shingle_set(docs, "doc_id", "text", n=3, distinct=False)
-        sigs = minhash_signatures(sh, "doc_id", k=8)
-        old = lsh_candidate_pairs(sigs, "doc_id", k=8, rows_per_band=2)
-        new = lsh_candidate_pairs(sigs, "doc_id", k=8, rows_per_band=2, first_band_dedup=True)
-        assert old.count() > 0
-        assert new.exceptAll(old).count() == 0
-        assert old.exceptAll(new).count() == 0
-
-
 class TestJoinOperatorProperties:
     """asof_join / band_range_join vs pure-Python oracles on random
     inputs — one Spark round-trip per example, tiny frames."""
