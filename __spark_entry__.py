@@ -61,6 +61,18 @@ _RETEST = [
     "events_versioned_dv_delete",
     "events_versioned_dv_upsert",
     "limpieza_update_set",
+    # the copy-on-write MERGE now computes its source and match set
+    # once and reads the base schema from the manifest; the change
+    # feed reads its change files through the commit's schema — fresh
+    # rows on every merge query those paths serve
+    "events_merge_upsert_cow",
+    "events_merge_guarded_update",
+    "events_merge_sync_delete",
+    "events_merge_insert_condition",
+    "events_merge_concurrent_rebase",
+    "events_versioned_identity",
+    "events_versioned_generated_column",
+    "events_versioned_cdf_commitfiles",
     # (r12 retest entries retired — every one got its fresh green
     # driver row in CORRECTNESS_r12 on the restructured code)
 ]
@@ -72,6 +84,17 @@ _RETEST = [
 #: this list pins their order so the 50-row gate covers every one and
 #: closes lifetime coverage at 174/174.
 _PRIORITY = [
+    # r14 rewrites first: their plans changed after their last
+    # correctness rows, and being covered they rank by this order
+    # among the green
+    "embeddings_neardup_recall",
+    "docs_semantic_neardup",
+    "docs_semantic_neardup_scaled",
+    "parts_triangle_counts",
+    "docs_inverted_index",
+    "events_asof_config",
+    "docs_neardup_resolved",
+    "docs_minhash_jaccard_estimate",
     "events_rolling_zscore",
     "events_acf_lags",
     "station_value_trend",
@@ -87,7 +110,6 @@ _PRIORITY = [
     "events_purchase_attribution",
     "customers_rfm_scores",
     "orders_part_cooccurrence",
-    "parts_triangle_counts",
     "parts_cooccurrence_pagerank",
     "dq_events_profile",
     "dq_referential_orphans",
@@ -115,8 +137,9 @@ def _coverage_order(names) -> list[str]:
     where they matter most: (0) queries re-tested after a fix or a red
     prior row, (1) never-covered judge-priority queries, (2) other
     never-covered queries in registration order, (3) already-green
-    queries. Stable within each rank; falls back to registration order
-    when no prior-round files exist."""
+    queries, judge-priority ones first in ``_PRIORITY`` order. Stable
+    within each rank; falls back to registration order when no
+    prior-round files exist."""
     import glob
     import json
 
@@ -152,7 +175,7 @@ def _coverage_order(names) -> list[str]:
             return (0, 0)
         if n not in covered:
             return (1, prio[n]) if n in prio else (2, 0)
-        return (3, 0)
+        return (3, prio.get(n, len(prio)))
 
     return sorted(names, key=rank)
 

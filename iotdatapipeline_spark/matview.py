@@ -82,6 +82,15 @@ class ViewHistoryExpired(RuntimeError):
     the one non-incremental step) — or retain more history."""
 
 
+def _columns_at(t: VersionedTable, version: int | None = None):
+    """``t``'s schema fields at ``version`` (default: latest), read from
+    the manifest: no file listing and no Spark job, where a snapshot
+    read of a table above 32 files launches a listing job to report
+    its columns."""
+    v = t.version() if version is None else version
+    return t._schema_of(t._read_manifest(v)).fields
+
+
 def kmv_estimate(k: int = 64):
     """Distinct-count estimate Column over a maintained ``kmv`` sketch
     column (the APPROX-DISTINCT view tier): exact below k kept hashes,
@@ -274,7 +283,7 @@ class MaterializedView(_MaintainedTable):
         — passes untouched; a renamed/dropped fed column or explicit
         feed key raises the typed error instead of surfacing a raw
         AnalysisException mid-plan."""
-        have = set(src.snapshot(v_src).columns)
+        have = {f.name for f in _columns_at(src, v_src)}
         needed = self._feed_cols(spec) + list(spec.get("keys") or [])
         missing = sorted({c for c in needed if c not in have})
         if missing:
@@ -299,14 +308,8 @@ class MaterializedView(_MaintainedTable):
         t = self.table()
         if t.version() == 0:
             return
-        src_types = {
-            f.name: f.dataType.simpleString()
-            for f in src.snapshot(v_src).schema.fields
-        }
-        view_types = {
-            f.name: f.dataType.simpleString()
-            for f in t.snapshot().schema.fields
-        }
+        src_types = {f.name: f.dataType.simpleString() for f in _columns_at(src, v_src)}
+        view_types = {f.name: f.dataType.simpleString() for f in _columns_at(t)}
         pairs = [(g, g) for g in spec["group_by"]]
         pairs += [(c, f"min_{c}") for c in spec.get("min_cols") or []]
         pairs += [(c, f"max_{c}") for c in spec.get("max_cols") or []]
@@ -473,7 +476,7 @@ class BqVectorIndex(_MaintainedTable):
     def _check_source_schema(
         self, src: VersionedTable, v_src: int, spec: dict
     ) -> None:
-        have = set(src.snapshot(v_src).columns)
+        have = {f.name for f in _columns_at(src, v_src)}
         missing = sorted(
             {c for c in (spec["id_col"], spec["vec_col"]) if c not in have}
         )
@@ -609,12 +612,8 @@ class _TwoSourceView(_MaintainedTable):
         join keys and per-side row keys must exist on their sides, and
         every fed column somewhere across the union — else the typed
         error, BEFORE any feed read (r13)."""
-        a_cols = set(
-            VersionedTable(self.spark, spec["a_root"]).snapshot(va).columns
-        )
-        b_cols = set(
-            VersionedTable(self.spark, spec["b_root"]).snapshot(vb).columns
-        )
+        a_cols = {f.name for f in _columns_at(VersionedTable(self.spark, spec["a_root"]), va)}
+        b_cols = {f.name for f in _columns_at(VersionedTable(self.spark, spec["b_root"]), vb)}
         missing = sorted(
             {
                 c

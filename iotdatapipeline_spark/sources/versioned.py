@@ -48,7 +48,8 @@ import time
 import uuid
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -142,6 +143,24 @@ def _loosen_nullability(a, b):
             ]
         )
     return a
+
+
+def _as_nullable(dt):
+    """``dt`` with every field-nullable/containsNull/valueContainsNull
+    flag set — the schema Spark's file sources report for any read
+    schema, so a frame built from it matches a data file read field for
+    field."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    return dt
 
 
 def _phys_conflicts(m: dict) -> set[str]:
@@ -696,6 +715,23 @@ class VersionedTable:
             rev = {p: l for l, p in cmap.items()}
             df = df.select(*[F.col(c).alias(rev.get(c, c)) for c in df.columns])
         return df
+
+    def _schema_of(self, m: dict):
+        """Manifest ``m``'s logical schema as a read of its files reports
+        it: every field nullable, as Spark's file sources make them (a
+        version with no files keeps the recorded flags, as its
+        ``snapshot`` does). For the schema-only needs — a merge's base
+        schema, a view's source checks — this costs no listing, footer
+        read or Spark job, where a snapshot of more than 32 files
+        (Spark's parallel-listing threshold) launches a listing job just
+        to report its columns. A manifest without a recorded schema
+        reads the snapshot's."""
+        from pyspark.sql.types import StructType
+
+        if m.get("schema") is None:
+            return self._read_data(m, m["files"]).schema
+        logical = StructType.fromJson(json.loads(m["schema"]))
+        return _as_nullable(logical) if m["files"] else logical
 
     @staticmethod
     def _to_physical(df: DataFrame, m: dict) -> DataFrame:
@@ -1715,9 +1751,18 @@ class VersionedTable:
                     "_change_type", F.lit("insert")
                 )
             else:
-                df = self.spark.read.parquet(
-                    *[os.path.join(self._data, n) for n in names]
-                )
+                # change files are written aligned to the commit's
+                # logical schema plus _change_type (_write_cdf_files):
+                # read them through it, with no schema-inference job;
+                # a commit without a recorded schema infers
+                reader = self.spark.read
+                if m.get("schema") is not None:
+                    reader = reader.schema(
+                        StructType.fromJson(json.loads(m["schema"])).add(
+                            "_change_type", StringType()
+                        )
+                    )
+                df = reader.parquet(*[os.path.join(self._data, n) for n in names])
             have = {f.name: f.dataType for f in df.schema.fields}
             if "_change_type" not in have:
                 return None  # unreadable/foreign change file: fall back
@@ -2205,234 +2250,224 @@ class VersionedTable:
                 when_matched_condition,
                 when_not_matched_condition,
             )
-        src_keys = source.select(*keys).distinct()
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("merge_into target does not exist; create() it first")
-            m = self._read_manifest(base)
-            if txn_app is not None:
-                seen = (m.get("txns") or {}).get(txn_app)
-                if seen is not None and int(seen[0]) >= int(txn_version):
-                    return int(seen[1])  # already applied (batch replay)
-            base_df = self.snapshot(base)
-            # stats pre-prune (data skipping): files whose manifest
-            # [min, max] range provably misses the source's key bounds
-            # cannot hold a match, so the exact semi-join below never
-            # reads them AT ALL. Without this, the "which files are
-            # touched" probe scans the whole table — the step that
-            # turns a key-local MERGE into a full-table read at 100 TB.
-            stats = self._stats_of(m)
-            candidates = self._candidates_by_key_bounds(m, src_keys, keys)
-            # WHEN NOT MATCHED BY SOURCE scope: files that might hold a
-            # delete-eligible row — the condition's range bounds prune
-            # exactly like scan(); no condition puts every file in scope
-            # (any file may hold a now-absent key)
-            nmbs_scope: list[str] = []
-            nmbs_pred = None
-            if not_matched_by_source == "delete":
-                nmbs_scope = self._keep_files(
-                    m, _extract_ranges(nmbs_cond) if nmbs_cond else {}
-                )
-                # delete only when the condition is TRUE (NULL keeps)
-                nmbs_pred = (
-                    F.coalesce(F.expr(nmbs_cond).cast("boolean"), F.lit(False))
-                    if nmbs_cond
-                    else F.lit(True)
-                )
-            # WHEN MATCHED AND <cond>: a matched pair updates only when
-            # the predicate (over t.<col> / s.<col>) is TRUE; NULL and
-            # FALSE leave the target row untouched AND drop the source
-            # row. Keys with any passing pair are "matched-true".
-            wm_pred = None
-            if when_matched_condition is not None:
-                wm_pred = F.coalesce(
-                    F.expr(when_matched_condition).cast("boolean"), F.lit(False)
-                )
-            # exact file-level pruning over the candidates: the
-            # collected result is the bounded list of touched FILES,
-            # never data rows. plain join (no forced broadcast):
-            # Catalyst/AQE broadcasts the key set when it is small —
-            # the common dim-merge case — and falls back to a shuffle
-            # join for huge sources
-            touched: set[str] = set()
-            matched_true_keys = None
-            matched_false_keys = None
-            probe_files = sorted(set(candidates) | set(nmbs_scope))
-            if probe_files:
-                # manifest-schema read (_read_data): candidates can mix
-                # old-schema and evolved files after schema_evolution.
-                # with_file=True: file identity comes from the read
-                # itself (input_file_name() cannot resolve once the DV
-                # anti-join makes the frame multi-source), and only
-                # LIVE rows probe — a file whose every matching row is
-                # DV-deleted is correctly not touched
-                snap = self._read_data(m, probe_files, with_file=True)
-                if wm_pred is None:
-                    touched = {
-                        r["__file"]
-                        for r in snap.join(src_keys, keys, "left_semi")
-                        .select("__file")
-                        .distinct()
-                        .collect()
-                    }
-                else:
-                    from functools import reduce as _reduce
-
-                    eq = _reduce(
-                        lambda a, b: a & b,
-                        [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
+        # one computation of the source per call: the key bounds, the
+        # match probe, the insert write and the change files all read it
+        # (each of those jobs used to re-run the source plan). Persisted
+        # rather than checkpointed, so joins plan on its measured size;
+        # a source the caller already cached is left as it is
+        owned = source.storageLevel == StorageLevel.NONE
+        if owned:
+            source = source.persist()
+        try:
+            # no distinct: min/max and semi/anti-join build sides do not
+            # need unique keys, and the distinct cost a shuffle per use
+            src_keys = source.select(*keys)
+            for _ in range(max_retries):
+                base = self.version()
+                if base == 0:
+                    raise ValueError("merge_into target does not exist; create() it first")
+                m = self._read_manifest(base)
+                if txn_app is not None:
+                    seen = (m.get("txns") or {}).get(txn_app)
+                    if seen is not None and int(seen[0]) >= int(txn_version):
+                        return int(seen[1])  # already applied (batch replay)
+                # stats pre-prune (data skipping): files whose manifest
+                # [min, max] range provably misses the source's key bounds
+                # cannot hold a match, so the exact semi-join below never
+                # reads them AT ALL. Without this, the "which files are
+                # touched" probe scans the whole table — the step that
+                # turns a key-local MERGE into a full-table read at 100 TB.
+                stats = self._stats_of(m)
+                candidates = self._candidates_by_key_bounds(m, src_keys, keys)
+                # WHEN NOT MATCHED BY SOURCE scope: files that might hold a
+                # delete-eligible row — the condition's range bounds prune
+                # exactly like scan(); no condition puts every file in scope
+                # (any file may hold a now-absent key)
+                nmbs_scope: list[str] = []
+                nmbs_pred = None
+                if not_matched_by_source == "delete":
+                    nmbs_scope = self._keep_files(
+                        m, _extract_ranges(nmbs_cond) if nmbs_cond else {}
                     )
-                    pairs = snap.alias("t").join(source.alias("s"), eq, "inner")
-                    tkeys = [F.col(f"t.{k}").alias(k) for k in keys]
-                    # localCheckpoint: these tiny key frames gate the
-                    # touched collect, the kept rewrite AND the insert —
-                    # without it each job re-runs the probe×source join
-                    matched_true_keys = (
-                        pairs.filter(wm_pred)
-                        .select(*tkeys)
-                        .distinct()
-                        .localCheckpoint(eager=True)
+                    # delete only when the condition is TRUE (NULL keeps)
+                    nmbs_pred = (
+                        F.coalesce(F.expr(nmbs_cond).cast("boolean"), F.lit(False))
+                        if nmbs_cond
+                        else F.lit(True)
                     )
-                    matched_false_keys = (
-                        pairs.select(*tkeys)
-                        .distinct()
-                        .join(matched_true_keys, keys, "left_anti")
-                        .localCheckpoint(eager=True)
+                # WHEN MATCHED AND <cond>: a matched pair updates only when
+                # the predicate (over t.<col> / s.<col>) is TRUE; NULL and
+                # FALSE leave the target row untouched AND drop the source
+                # row. Keys with any passing pair are "matched-true".
+                wm_pred = None
+                if when_matched_condition is not None:
+                    wm_pred = F.coalesce(
+                        F.expr(when_matched_condition).cast("boolean"), F.lit(False)
                     )
-                    # files holding ANY live row of a matched-true KEY
-                    # touch — not just the file of the cond-TRUE row: a
-                    # duplicate key split across files must have ALL its
-                    # rows replaced (the kept rewrite anti-joins at key
-                    # level), else the cond-FALSE row's file survives
-                    # untouched and leaves a stale duplicate. A fully-
-                    # stale batch (no matched-true keys) still touches
-                    # nothing
-                    touched = {
-                        r["__file"]
-                        for r in snap.join(matched_true_keys, keys, "left_semi")
-                        .select("__file")
-                        .distinct()
-                        .collect()
-                    }
-                if nmbs_pred is not None:
-                    touched |= {
-                        r["__file"]
-                        for r in snap.filter(nmbs_pred)
-                        .join(src_keys, keys, "left_anti")
-                        .select("__file")
-                        .distinct()
-                        .collect()
-                    }
-            cluster_by = m.get("cluster_by") or None
-            untouched = [f for f in m["files"] if f not in touched]
-            cols = base_df.columns  # parquet footer only, no job
-            rewritten: list[str] = []
-            touched_df = None
-            cdf_replaced = None
-            cdf_nmbs_del = None
-            if touched:
-                # manifest-schema read: when a merge touches BOTH an
-                # old-schema and an evolved file, an inferred read that
-                # picked the old footer would rewrite the kept rows of
-                # the evolved file WITHOUT their evolved-column values —
-                # permanent data loss committed into the new version
-                touched_df = self._read_data(m, sorted(touched))
-                replace_keys = (
-                    matched_true_keys if matched_true_keys is not None else src_keys
-                )
-                kept = touched_df.join(replace_keys, keys, "left_anti")
-                # commit-time CDF capture: the rows the rewrite REMOVES
-                # — replaced rows (update preimages / matched deletes)
-                # and the not-matched-by-source deletions — computed as
-                # the exact complement of `kept`, lazily (they feed one
-                # change-file write job before the commit)
-                cdf_replaced = touched_df.join(replace_keys, keys, "left_semi")
-                if nmbs_pred is not None:
+                # the MATCH SET: one (__file, *keys, __ok) row per live
+                # target row of the probed files whose key the source
+                # holds, __ok marking a REPLACED key. Computed once per
+                # attempt; the touched files, the kept rewrite, the
+                # inserts and the change rows all come from it instead of
+                # re-running the probe. Plain joins (no forced
+                # broadcast): Catalyst broadcasts its key frames when
+                # small — the common case — and shuffles for huge merges.
+                touched: set[str] = set()
+                replaced_keys = None  # keys whose target rows are replaced
+                dropped_keys = None  # matched-false keys (condition only)
+                probe_files = sorted(set(candidates) | set(nmbs_scope))
+                if probe_files:
+                    # manifest-schema read (_read_data): candidates can mix
+                    # old-schema and evolved files after schema_evolution.
+                    # with_file=True: file identity comes from the read
+                    # itself (input_file_name() cannot resolve once the DV
+                    # anti-join makes the frame multi-source), and only
+                    # LIVE rows probe — a file whose every matching row is
+                    # DV-deleted is correctly not touched
+                    snap = self._read_data(m, probe_files, with_file=True)
                     if wm_pred is None:
-                        # matched rows are already gone (anti src_keys):
-                        # every survivor is key-unmatched, filter direct
-                        cdf_nmbs_del = kept.filter(nmbs_pred)
-                        kept = kept.filter(~nmbs_pred)
+                        pairs = snap.join(src_keys, keys, "left_semi").select(
+                            "__file", *keys, F.lit(True).alias("__ok")
+                        )
                     else:
-                        # matched-false rows survive the anti above but
-                        # are NOT "not matched by source" — only rows
-                        # whose key is absent from the source delete
-                        cdf_nmbs_del = kept.join(src_keys, keys, "left_anti").filter(
-                            nmbs_pred
+                        from functools import reduce as _reduce
+
+                        eq = _reduce(
+                            lambda a, b: a & b,
+                            [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
                         )
-                        kept = (
-                            kept.join(
-                                src_keys.withColumn("__in_src", F.lit(1)),
-                                keys,
-                                "left",
+                        # files holding ANY live row of a matched-true KEY
+                        # touch — not just the file of the cond-TRUE row: a
+                        # duplicate key split across files must have ALL its
+                        # rows replaced (the kept rewrite anti-joins at key
+                        # level), else the cond-FALSE row's file survives
+                        # untouched and leaves a stale duplicate. A fully-
+                        # stale batch (no matched-true keys) touches nothing
+                        pairs = (
+                            snap.alias("t")
+                            .join(source.alias("s"), eq, "inner")
+                            .select(
+                                F.col("t.__file").alias("__file"),
+                                *[F.col(f"t.{k}").alias(k) for k in keys],
+                                wm_pred.alias("__ok"),
                             )
-                            .filter(~(F.col("__in_src").isNull() & nmbs_pred))
-                            .drop("__in_src")
+                            .withColumn("__ok", F.max("__ok").over(Window.partitionBy(*keys)))
                         )
-                rewritten += self._write_files_mapped(
-                    kept, m, n_files=max(1, len(touched)), cluster_by=cluster_by
-                )
-            if when_matched == "update":
-                # with a matched-condition, cond-false source rows are
-                # dropped (neither update nor insert)
-                inserted = (
-                    source
-                    if matched_false_keys is None
-                    else source.join(matched_false_keys, keys, "left_anti")
-                )
-            else:
-                # delete matched; still insert the not-matched source
-                # rows. Matched keys can only live in touched files, so
-                # the full snapshot need not be re-read.
-                if touched_df is not None:
-                    matched_keys = touched_df.select(*keys).distinct()
-                    inserted = source.join(matched_keys, keys, "left_anti")
-                else:
-                    inserted = source
-            if when_not_matched_condition is not None:
-                # WHEN NOT MATCHED AND <cond> THEN INSERT: the condition
-                # gates FRESH rows only — an update's postimage (a
-                # matched key) flows through untouched (Delta semantics)
-                wnm_pred = F.coalesce(
-                    F.expr(when_not_matched_condition).cast("boolean"), F.lit(False)
-                )
-                if when_matched == "update" and touched_df is not None:
-                    mkeys = (
-                        matched_true_keys
-                        if matched_true_keys is not None
-                        else touched_df.select(*keys)
-                        .distinct()
-                        .join(src_keys, keys, "left_semi")
+                    # one job (after the source-key broadcast) computes the
+                    # match set and, through the observation, the touched
+                    # files. Checkpointed rather than persisted: the later
+                    # plans then share one broadcast of its key frames
+                    files_seen = Observation()
+                    matched = pairs.observe(
+                        files_seen,
+                        F.collect_set(F.when(F.col("__ok"), F.col("__file"))).alias("files"),
+                    ).localCheckpoint(eager=True)
+                    touched = set(files_seen.get["files"])
+                    replaced_keys = matched.filter("__ok").select(*keys)
+                    if wm_pred is not None:
+                        dropped_keys = matched.filter(~F.col("__ok")).select(*keys)
+                    if nmbs_pred is not None:
+                        touched |= {
+                            r["__file"]
+                            for r in snap.filter(nmbs_pred)
+                            .join(src_keys, keys, "left_anti")
+                            .select("__file")
+                            .distinct()
+                            .collect()
+                        }
+                cluster_by = m.get("cluster_by") or None
+                untouched = [f for f in m["files"] if f not in touched]
+                rewritten: list[str] = []
+                touched_df = None
+                cdf_replaced = None
+                cdf_nmbs_del = None
+                if touched:
+                    # manifest-schema read: when a merge touches BOTH an
+                    # old-schema and an evolved file, an inferred read that
+                    # picked the old footer would rewrite the kept rows of
+                    # the evolved file WITHOUT their evolved-column values —
+                    # permanent data loss committed into the new version
+                    touched_df = self._read_data(m, sorted(touched))
+                    kept = touched_df.join(replaced_keys, keys, "left_anti")
+                    # commit-time CDF capture: the rows the rewrite REMOVES
+                    # — replaced rows (update preimages / matched deletes)
+                    # and the not-matched-by-source deletions — computed as
+                    # the exact complement of `kept`, lazily (they feed one
+                    # change-file write job before the commit)
+                    cdf_replaced = touched_df.join(replaced_keys, keys, "left_semi")
+                    if nmbs_pred is not None:
+                        if wm_pred is None:
+                            # matched rows are already gone: every survivor
+                            # is key-unmatched, filter direct
+                            cdf_nmbs_del = kept.filter(nmbs_pred)
+                            kept = kept.filter(~nmbs_pred)
+                        else:
+                            # matched-false rows survive the anti above but
+                            # are NOT "not matched by source" — only rows
+                            # whose key is absent from the source delete
+                            # (a surviving row's key is in the source iff
+                            # it is a matched-false key)
+                            cdf_nmbs_del = kept.join(dropped_keys, keys, "left_anti").filter(
+                                nmbs_pred
+                            )
+                            kept = (
+                                kept.join(
+                                    dropped_keys.distinct().withColumn("__in_src", F.lit(1)),
+                                    keys,
+                                    "left",
+                                )
+                                .filter(~(F.col("__in_src").isNull() & nmbs_pred))
+                                .drop("__in_src")
+                            )
+                    rewritten += self._write_files_mapped(
+                        kept, m, n_files=max(1, len(touched)), cluster_by=cluster_by
                     )
-                    inserted = inserted.join(mkeys, keys, "left_semi").unionByName(
-                        inserted.join(mkeys, keys, "left_anti").filter(wnm_pred)
+                if when_matched == "update":
+                    # with a matched-condition, cond-false source rows are
+                    # dropped (neither update nor insert)
+                    inserted = (
+                        source
+                        if dropped_keys is None
+                        else source.join(dropped_keys, keys, "left_anti")
                     )
                 else:
-                    # delete-mode (already all-fresh) or no matches at all
-                    inserted = inserted.filter(wnm_pred)
-            # identity columns: matched rows inherit their value from
-            # the touched target rows, fresh rows get watermark + rank
-            # (before generated/alignment so the column exists for both)
-            inserted, new_identity = self._assign_identity(inserted, m, keys, touched_df)
-            # generated columns: compute the ones the source omits,
-            # refuse sources that contradict one (before alignment, so
-            # a computed column exists for the schema projection)
-            inserted = self._apply_generated(inserted, m)
-            ins, committed_schema = self._align_insert(
-                base_df,
-                source,
-                inserted,
-                schema_evolution,
-                m.get("retired_cols") or (),
-                sorted(_phys_conflicts(m)),
-            )
-            ins_empty = ins.isEmpty()  # one job, reused below
-            if not ins_empty:
+                    # delete matched; still insert the not-matched source rows
+                    inserted = (
+                        source.join(replaced_keys, keys, "left_anti") if touched else source
+                    )
+                if when_not_matched_condition is not None:
+                    # WHEN NOT MATCHED AND <cond> THEN INSERT: the condition
+                    # gates FRESH rows only — an update's postimage (a
+                    # matched key) flows through untouched (Delta semantics)
+                    wnm_pred = F.coalesce(
+                        F.expr(when_not_matched_condition).cast("boolean"), F.lit(False)
+                    )
+                    if when_matched == "update" and touched:
+                        inserted = inserted.join(replaced_keys, keys, "left_semi").unionByName(
+                            inserted.join(replaced_keys, keys, "left_anti").filter(wnm_pred)
+                        )
+                    else:
+                        # delete-mode (already all-fresh) or no matches at all
+                        inserted = inserted.filter(wnm_pred)
+                # identity columns: matched rows inherit their value from
+                # the touched target rows, fresh rows get watermark + rank
+                # (before generated/alignment so the column exists for both)
+                inserted, new_identity = self._assign_identity(inserted, m, keys, touched_df)
+                # generated columns: compute the ones the source omits,
+                # refuse sources that contradict one (before alignment, so
+                # a computed column exists for the schema projection)
+                inserted = self._apply_generated(inserted, m)
+                ins, committed_schema = self._align_insert(
+                    self._schema_of(m),
+                    source,
+                    inserted,
+                    schema_evolution,
+                    m.get("retired_cols") or (),
+                    sorted(_phys_conflicts(m)),
+                )
                 self._check_constraints(ins, m)
-            if ins_empty and not touched:
-                return base  # no-op merge
-            if not ins_empty:
+                # no emptiness probe: the write drops zero-row parts, so
+                # an empty insert writes no file
                 if cluster_by:
                     # keep the INSERT files clustered too: without this
                     # every merge appends one unclustered file per
@@ -2441,112 +2476,106 @@ class VersionedTable:
                     # prune them. File count follows the merge's own
                     # locality (like the kept-rewrite), with optimize()
                     # as the long-run compactor.
-                    rewritten += self._write_files_mapped(
+                    added = self._write_files_mapped(
                         ins, m, n_files=max(1, len(touched)), cluster_by=cluster_by
                     )
                 else:
-                    rewritten += self._write_files_mapped(ins, m)
-            # commit-time CDF: a pure append's added files ARE the feed
-            # (mode "data", zero extra write — the streaming-sink common
-            # case); anything touching existing rows writes explicit
-            # change files (O(changed rows), one job)
-            if not touched:
-                cdf_rec: dict | None = {"mode": "data"}
-            elif not m.get("cdf_enabled", True):
-                cdf_rec = None  # property off: commit derive-mode, no write
-            else:
-                ins_live = None if ins_empty else ins
-                if when_matched == "update":
-                    mk = cdf_replaced.select(*keys).distinct()
-                    parts = [
-                        (cdf_replaced, "update_preimage"),
-                        (
-                            None
-                            if ins_live is None
-                            else ins_live.join(mk, keys, "left_semi"),
-                            "update_postimage",
-                        ),
-                        (
-                            None
-                            if ins_live is None
-                            else ins_live.join(mk, keys, "left_anti"),
-                            "insert",
-                        ),
-                        (cdf_nmbs_del, "delete"),
-                    ]
+                    added = self._write_files_mapped(ins, m)
+                if not added and not touched:
+                    return base  # no-op merge
+                rewritten += added
+                # commit-time CDF: a pure append's added files ARE the feed
+                # (mode "data", zero extra write — the streaming-sink common
+                # case); anything touching existing rows writes explicit
+                # change files (O(changed rows), one job)
+                if not touched:
+                    cdf_rec: dict | None = {"mode": "data"}
+                elif not m.get("cdf_enabled", True):
+                    cdf_rec = None  # property off: commit derive-mode, no write
                 else:
-                    parts = [
-                        (cdf_replaced, "delete"),
-                        (cdf_nmbs_del, "delete"),
-                        (ins_live, "insert"),
-                    ]
-                cdf_names = self._write_cdf_files(
-                    parts, committed_schema, n_files=max(1, len(touched))
+                    if when_matched == "update":
+                        parts = [
+                            (cdf_replaced, "update_preimage"),
+                            (ins.join(replaced_keys, keys, "left_semi"), "update_postimage"),
+                            (ins.join(replaced_keys, keys, "left_anti"), "insert"),
+                            (cdf_nmbs_del, "delete"),
+                        ]
+                    else:
+                        parts = [
+                            (cdf_replaced, "delete"),
+                            (cdf_nmbs_del, "delete"),
+                            (ins, "insert"),
+                        ]
+                    cdf_names = self._write_cdf_files(
+                        parts, committed_schema, n_files=max(1, len(touched))
+                    )
+                    cdf_rec = (
+                        {"mode": "files", "files": cdf_names}
+                        if cdf_names
+                        else {"mode": "none"}
+                    )
+                stat_cols = list(dict.fromkeys((cluster_by or []) + keys))
+                rewritten_stats = self._collect_stats_mapped(rewritten, stat_cols, m)
+                new_stats = {f: stats[f] for f in untouched if f in stats}
+                new_stats.update(rewritten_stats)
+                # rewritten files were read THROUGH their DVs (_read_data),
+                # so the rewrite materializes pending deletes and the new
+                # files start DV-free; untouched files keep their mappings
+                m_dvs = m.get("dvs") or {}
+                new_dvs = {f: list(m_dvs[f]) for f in untouched if f in m_dvs}
+                op = f"merge:{when_matched}" + (
+                    "+syncdel" if not_matched_by_source == "delete" else ""
                 )
-                cdf_rec = (
-                    {"mode": "files", "files": cdf_names}
-                    if cdf_names
-                    else {"mode": "none"}
-                )
-            stat_cols = list(dict.fromkeys((cluster_by or []) + keys))
-            rewritten_stats = self._collect_stats_mapped(rewritten, stat_cols, m)
-            new_stats = {f: stats[f] for f in untouched if f in stats}
-            new_stats.update(rewritten_stats)
-            # rewritten files were read THROUGH their DVs (_read_data),
-            # so the rewrite materializes pending deletes and the new
-            # files start DV-free; untouched files keep their mappings
-            m_dvs = m.get("dvs") or {}
-            new_dvs = {f: list(m_dvs[f]) for f in untouched if f in m_dvs}
-            op = f"merge:{when_matched}" + (
-                "+syncdel" if not_matched_by_source == "delete" else ""
-            )
-            try:
-                self._try_commit(
-                    base,
-                    untouched + rewritten,
-                    op,
-                    cluster_by,
-                    txn_app,
-                    txn_version,
-                    schema_json=committed_schema,
-                    stats=new_stats,
-                    dvs=new_dvs,
-                    identity=new_identity,
-                    cdf=cdf_rec,
-                )
-                return base + 1
-            except CommitConflict:
-                # logical conflict check first: when the intervening
-                # commits are provably disjoint from this merge's read
-                # set, re-commit the finished files against the new
-                # head (metadata-only) instead of re-running the merge
-                rb = self._rebase_merge_commit(
-                    base,
-                    probe_files,
-                    src_keys,
-                    keys,
-                    nmbs_on=not_matched_by_source == "delete",
-                    txn_app=txn_app,
-                    txn_version=txn_version,
-                    op=op,
-                    cluster_by=cluster_by,
-                    committed_schema=committed_schema,
-                    new_identity=new_identity,
-                    cdf_rec=cdf_rec,
-                    touched=touched,
-                    new_files=rewritten,
-                    new_file_stats=rewritten_stats,
-                )
-                if rb is not None:
-                    return rb
-                # orphaned files from the failed attempt are cleaned by
-                # vacuum(); re-read the new snapshot and re-apply
-                continue
+                try:
+                    self._try_commit(
+                        base,
+                        untouched + rewritten,
+                        op,
+                        cluster_by,
+                        txn_app,
+                        txn_version,
+                        schema_json=committed_schema,
+                        stats=new_stats,
+                        dvs=new_dvs,
+                        identity=new_identity,
+                        cdf=cdf_rec,
+                    )
+                    return base + 1
+                except CommitConflict:
+                    # logical conflict check first: when the intervening
+                    # commits are provably disjoint from this merge's read
+                    # set, re-commit the finished files against the new
+                    # head (metadata-only) instead of re-running the merge
+                    rb = self._rebase_merge_commit(
+                        base,
+                        probe_files,
+                        src_keys,
+                        keys,
+                        nmbs_on=not_matched_by_source == "delete",
+                        txn_app=txn_app,
+                        txn_version=txn_version,
+                        op=op,
+                        cluster_by=cluster_by,
+                        committed_schema=committed_schema,
+                        new_identity=new_identity,
+                        cdf_rec=cdf_rec,
+                        touched=touched,
+                        new_files=rewritten,
+                        new_file_stats=rewritten_stats,
+                    )
+                    if rb is not None:
+                        return rb
+                    # orphaned files from the failed attempt are cleaned by
+                    # vacuum(); re-read the new snapshot and re-apply
+                    continue
+        finally:
+            if owned:
+                source.unpersist()
         raise CommitConflict(f"merge_into on {self.root} gave up after {max_retries} conflicts")
 
     @staticmethod
     def _align_insert(
-        base_df: DataFrame,
+        base_schema,
         source: DataFrame,
         inserted: DataFrame,
         schema_evolution: bool,
@@ -2609,7 +2638,7 @@ class VersionedTable:
 
         src_types = {f.name: f.dataType for f in inserted.schema.fields}
         if schema_evolution:
-            base_fields = list(base_df.schema.fields)
+            base_fields = list(base_schema.fields)
             base_names = {f.name for f in base_fields}
             added = [f for f in source.schema.fields if f.name not in base_names]
             clash = [f.name for f in added if f.name in set(retired)]
@@ -2655,7 +2684,7 @@ class VersionedTable:
                 reconcile(f, src_types[f.name]) if f.name in src_types else f.dataType,
                 f.nullable,
             )
-            for f in base_df.schema.fields
+            for f in base_schema.fields
         ]
         ins = inserted.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in committed]
@@ -2705,7 +2734,6 @@ class VersionedTable:
                 if seen is not None and int(seen[0]) >= int(txn_version):
                     return int(seen[1])  # already applied (batch replay)
             cluster_by = m.get("cluster_by") or None
-            base_df = self.snapshot(base)
             candidates = self._candidates_by_key_bounds(m, src_keys, keys)
             # WHEN NOT MATCHED BY SOURCE scope (see the COW path): the
             # condition's range bounds prune the in-scope files; the
@@ -2797,7 +2825,7 @@ class VersionedTable:
             # a computed column exists for the schema projection)
             inserted = self._apply_generated(inserted, m)
             ins, committed_schema = self._align_insert(
-                base_df,
+                self._schema_of(m),
                 source,
                 inserted,
                 schema_evolution,

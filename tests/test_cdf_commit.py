@@ -222,6 +222,40 @@ class TestCommitTimeCDF:
         )
         assert fast == ref
 
+    def test_change_files_read_across_add_and_widen(self, spark, tmp_path):
+        """Change files are read through their own commit's manifest
+        schema: those written before an ``add_column`` lack the column,
+        those written before a ``widen_column`` hold the narrow type,
+        and the feed over either boundary equals the derivation."""
+        root = str(tmp_path / "evo")
+        t = VersionedTable(spark, root)
+        t.create(
+            spark.createDataFrame([(i, i * 10) for i in range(8)], "k long, v int"),
+            n_files=2,
+            cluster_by=["k"],
+        )
+        t.merge_into(spark.createDataFrame([(1, 11), (20, 1)], "k long, v int"), ["k"])
+        t.add_column("w", "string")
+        t.merge_into(spark.createDataFrame([(2, 22, "x")], "k long, v int, w string"), ["k"])
+        t.widen_column("v", "bigint")
+        t.merge_into(
+            spark.createDataFrame([(3, 2**40, "y"), (5, 5, None)], "k long, v long, w string"),
+            ["k"],
+        )
+        modes = [(m.get("cdf") or {}).get("mode") for m in t.history()]
+        assert modes == ["data", "files", "none", "files", "none", "files"]
+        head = t.version()
+        for rng in [(1, head), (2, head), (1, 4), (3, head)]:
+            for pre in (False, True):
+                fast = _no_fallback(VersionedTable(spark, root)).changes(
+                    *rng, keys=["k"], include_preimages=pre
+                )
+                ref = _derived(spark, root, *rng, ["k"], pre)
+                assert fast.schema.simpleString() == ref.schema.simpleString(), rng
+                assert sorted(map(tuple, fast.collect())) == sorted(
+                    map(tuple, ref.collect())
+                ), (rng, pre)
+
     def test_vacuum_keeps_cdf_files_expire_reclaims(self, spark, table):
         table.merge_into(spark.createDataFrame([Row(k=2, v=99, s="u")]), ["k"])
         cdf_files = set(table.history()[-1]["cdf"]["files"])

@@ -579,3 +579,24 @@ class TestSemanticNeardupEdges:
         touched = {i for pair in got for i in pair[:2]}
         assert not touched & {0, 11, 15}
         assert {9, 10} <= touched
+
+
+class TestHeadlineNoCheckpoint:
+    def test_headline_plans_hold_no_checkpoint(self, spark, sf_small):
+        """``bench.py`` times repeated actions on ONE DataFrame object
+        per headline query: a checkpoint in its plan would be computed
+        by the first rep and reused by every later one, so no headline
+        plan may hold a ``LogicalRDD``/``ExistingRDD`` node."""
+        import re
+
+        import bench
+
+        names = [n for n in bench.HEADLINE if n in QUERIES]
+        assert len(names) == len(bench.HEADLINE)
+        dirty = {}
+        for n in names:
+            analyzed = QUERIES[n](spark, sf_small)._jdf.queryExecution().analyzed().toString()
+            found = set(re.findall(r"\b(?:LogicalRDD|ExistingRDD)\b", analyzed))
+            if found:
+                dirty[n] = sorted(found)
+        assert dirty == {}
