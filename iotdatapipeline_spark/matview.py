@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iotdatapipeline_spark.sources.versioned import VersionedTable
+from iotdatapipeline_spark.streaming.sinks import CURSOR_RADIX
 
 _SPEC_NAME = "_mv_spec.json"
 _TXN_APP = "mv-refresh"
@@ -80,15 +81,6 @@ class ViewHistoryExpired(RuntimeError):
     version; recover with ``reseed()`` — a full recompute at the
     source's current version that re-anchors the cursor (O(source),
     the one non-incremental step) — or retain more history."""
-
-
-def _columns_at(t: VersionedTable, version: int | None = None):
-    """``t``'s schema fields at ``version`` (default: latest), read from
-    the manifest: no file listing and no Spark job, where a snapshot
-    read of a table above 32 files launches a listing job to report
-    its columns."""
-    v = t.version() if version is None else version
-    return t._schema_of(t._read_manifest(v)).fields
 
 
 def kmv_estimate(k: int = 64):
@@ -141,12 +133,8 @@ class _MaintainedTable:
         return self.table().snapshot(version)
 
     def _applied_txn(self) -> int | None:
-        t = self.table()
-        head = t.version()
-        if head == 0:
-            return None
-        seen = (t._read_manifest(head).get("txns") or {}).get(_TXN_APP)
-        return None if seen is None else int(seen[0])
+        seen = self.table().txn(_TXN_APP)
+        return None if seen is None else seen[0]
 
 
 class MaterializedView(_MaintainedTable):
@@ -283,7 +271,7 @@ class MaterializedView(_MaintainedTable):
         — passes untouched; a renamed/dropped fed column or explicit
         feed key raises the typed error instead of surfacing a raw
         AnalysisException mid-plan."""
-        have = {f.name for f in _columns_at(src, v_src)}
+        have = {f.name for f in src._fields_at(v_src)}
         needed = self._feed_cols(spec) + list(spec.get("keys") or [])
         missing = sorted({c for c in needed if c not in have})
         if missing:
@@ -308,8 +296,8 @@ class MaterializedView(_MaintainedTable):
         t = self.table()
         if t.version() == 0:
             return
-        src_types = {f.name: f.dataType.simpleString() for f in _columns_at(src, v_src)}
-        view_types = {f.name: f.dataType.simpleString() for f in _columns_at(t)}
+        src_types = {f.name: f.dataType.simpleString() for f in src._fields_at(v_src)}
+        view_types = {f.name: f.dataType.simpleString() for f in t._fields_at()}
         pairs = [(g, g) for g in spec["group_by"]]
         pairs += [(c, f"min_{c}") for c in spec.get("min_cols") or []]
         pairs += [(c, f"max_{c}") for c in spec.get("max_cols") or []]
@@ -476,7 +464,7 @@ class BqVectorIndex(_MaintainedTable):
     def _check_source_schema(
         self, src: VersionedTable, v_src: int, spec: dict
     ) -> None:
-        have = {f.name for f in _columns_at(src, v_src)}
+        have = {f.name for f in src._fields_at(v_src)}
         missing = sorted(
             {c for c in (spec["id_col"], spec["vec_col"]) if c not in have}
         )
@@ -584,8 +572,6 @@ class _TwoSourceView(_MaintainedTable):
     ``refresh()`` recovers the pair, reads both heads, and runs ONE
     differential step — subclasses define :meth:`_step`."""
 
-    _PACK = 10**9
-
     def _step(
         self, v_a: tuple[int, int], v_b: tuple[int, int], force_seed: bool = False
     ) -> int:
@@ -600,7 +586,7 @@ class _TwoSourceView(_MaintainedTable):
         packed = self._applied_txn()
         if packed is None:
             return None
-        return packed // self._PACK, packed % self._PACK
+        return packed // CURSOR_RADIX, packed % CURSOR_RADIX
 
     def _fed_cols(self, spec: dict) -> list[str]:
         """Columns the definition feeds on beyond the join keys —
@@ -612,8 +598,8 @@ class _TwoSourceView(_MaintainedTable):
         join keys and per-side row keys must exist on their sides, and
         every fed column somewhere across the union — else the typed
         error, BEFORE any feed read (r13)."""
-        a_cols = {f.name for f in _columns_at(VersionedTable(self.spark, spec["a_root"]), va)}
-        b_cols = {f.name for f in _columns_at(VersionedTable(self.spark, spec["b_root"]), vb)}
+        a_cols = {f.name for f in VersionedTable(self.spark, spec["a_root"])._fields_at(va)}
+        b_cols = {f.name for f in VersionedTable(self.spark, spec["b_root"])._fields_at(vb)}
         missing = sorted(
             {
                 c
@@ -650,7 +636,7 @@ class _TwoSourceView(_MaintainedTable):
         now_a = VersionedTable(self.spark, spec["a_root"]).version()
         now_b = VersionedTable(self.spark, spec["b_root"]).version()
         applied = self._applied_txn()
-        packed = now_a * self._PACK + now_b
+        packed = now_a * CURSOR_RADIX + now_b
         if applied is not None and applied >= packed:
             return self._applied_pair()  # already current
         self._check_source_schema(spec, now_a, now_b)
@@ -802,10 +788,10 @@ class JoinMaterializedView(_TwoSourceView):
         mv = cls(spark, root)
         va = VersionedTable(spark, a_root).version()
         vb = VersionedTable(spark, b_root).version()
-        if vb >= cls._PACK:  # packed cursor: b must fit below the radix
+        if vb >= CURSOR_RADIX:  # packed cursor: b must fit below the radix
             raise ValueError(
                 f"JoinMaterializedView: source b at version {vb} exceeds the "
-                f"packed-cursor radix {cls._PACK}"
+                f"packed-cursor radix {CURSOR_RADIX}"
             )
         if va == 0 or vb == 0:
             raise ValueError("both source tables must exist; create() them first")

@@ -569,6 +569,31 @@ class VersionedTable:
             self._manifest_cache[version] = m
         return m
 
+    @staticmethod
+    def _txn_in(m: dict, app: str) -> tuple[int, int] | None:
+        """``app``'s entry in manifest ``m``'s txn map as
+        ``(txn_version, commit_version)``: the last transaction the app
+        committed and the table version that committed it. ``None`` when
+        the app never committed. The one reader of the map's format."""
+        seen = (m.get("txns") or {}).get(app)
+        return None if seen is None else (int(seen[0]), int(seen[1]))
+
+    def txn(self, app: str) -> tuple[int, int] | None:
+        """``app``'s txn entry at the head (see :meth:`_txn_in`); ``None``
+        also before the table exists. One cached manifest read — the
+        idempotence check every sink and maintained view makes before
+        applying a batch."""
+        head = self.version()
+        return None if head == 0 else self._txn_in(self._read_manifest(head), app)
+
+    def _fields_at(self, version: int | None = None):
+        """Schema fields at ``version`` (default: the head), read from
+        the manifest: no file listing and no Spark job, where a snapshot
+        of a table above 32 files launches a listing job to report its
+        columns."""
+        v = self.version() if version is None else version
+        return self._schema_of(self._read_manifest(v)).fields
+
     # ── referenced-files checkpoint ─────────────────────────────────────
     #
     # vacuum() needs the union of data files referenced by ANY committed
@@ -2054,9 +2079,9 @@ class VersionedTable:
                 return None
             head_m = self._read_manifest(head)
             if txn_app is not None:
-                seen = (head_m.get("txns") or {}).get(txn_app)
-                if seen is not None and int(seen[0]) >= int(txn_version):
-                    return int(seen[1])  # applied by the racing writer
+                seen = self._txn_in(head_m, txn_app)
+                if seen is not None and seen[0] >= int(txn_version):
+                    return seen[1]  # applied by the racing writer
             for fld in (
                 "schema",
                 "col_map",
@@ -2268,9 +2293,9 @@ class VersionedTable:
                     raise ValueError("merge_into target does not exist; create() it first")
                 m = self._read_manifest(base)
                 if txn_app is not None:
-                    seen = (m.get("txns") or {}).get(txn_app)
-                    if seen is not None and int(seen[0]) >= int(txn_version):
-                        return int(seen[1])  # already applied (batch replay)
+                    seen = self._txn_in(m, txn_app)
+                    if seen is not None and seen[0] >= int(txn_version):
+                        return seen[1]  # already applied (batch replay)
                 # stats pre-prune (data skipping): files whose manifest
                 # [min, max] range provably misses the source's key bounds
                 # cannot hold a match, so the exact semi-join below never
@@ -2730,9 +2755,9 @@ class VersionedTable:
                 raise ValueError("merge_into target does not exist; create() it first")
             m = self._read_manifest(base)
             if txn_app is not None:
-                seen = (m.get("txns") or {}).get(txn_app)
-                if seen is not None and int(seen[0]) >= int(txn_version):
-                    return int(seen[1])  # already applied (batch replay)
+                seen = self._txn_in(m, txn_app)
+                if seen is not None and seen[0] >= int(txn_version):
+                    return seen[1]  # already applied (batch replay)
             cluster_by = m.get("cluster_by") or None
             candidates = self._candidates_by_key_bounds(m, src_keys, keys)
             # WHEN NOT MATCHED BY SOURCE scope (see the COW path): the
@@ -3213,8 +3238,8 @@ class VersionedTable:
         version."""
 
         def mutate(base: int, m: dict) -> dict | None:
-            seen = (m.get("txns") or {}).get(txn_app)
-            if seen is not None and int(seen[0]) >= int(txn_version):
+            seen = self._txn_in(m, txn_app)
+            if seen is not None and seen[0] >= int(txn_version):
                 return None  # cursor already there
             return {"op": "txn", "txn_app": txn_app, "txn_version": int(txn_version)}
 
@@ -3659,9 +3684,9 @@ class VersionedTable:
                 raise ValueError("delete_matching target does not exist; create() it first")
             m = self._read_manifest(base)
             if txn_app is not None:
-                seen = (m.get("txns") or {}).get(txn_app)
-                if seen is not None and int(seen[0]) >= int(txn_version):
-                    return int(seen[1])  # already applied (batch replay)
+                seen = self._txn_in(m, txn_app)
+                if seen is not None and seen[0] >= int(txn_version):
+                    return seen[1]  # already applied (batch replay)
             candidates = self._candidates_by_key_bounds(m, src_keys, keys)
             if not candidates:
                 return base  # no file can hold a matching key

@@ -4,10 +4,13 @@ The reference upserts row-at-a-time over pyodbc (Prensas.py:224, 334,
 392). Here each micro-batch computes its effect functionally
 (insert-set / update-set / reject-set — oracle-testable, SURVEY.md §7
 step 5) and a ``foreachBatch`` executor applies it. On plain parquet
-the upsert is anti-join + rewrite (atomic via temp-dir swap); on a
+the upsert is anti-join + rewrite, swapped in by renaming the old table
+aside (crash-safe, not atomic: see :func:`_swap_overwrite`); on a
 transactional table format this maps 1:1 to ``MERGE WHEN MATCHED
 UPDATE / WHEN NOT MATCHED INSERT`` — the executor is the only piece
-that changes at production scale.
+that changes at production scale. The VersionedTable executors share
+one write protocol: :func:`_first_commit`, :func:`_applied`,
+:func:`_maintain_groups` and :func:`_delta_join`.
 """
 
 from __future__ import annotations
@@ -15,10 +18,13 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from iotdatapipeline_spark.sources.versioned import CommitConflict, VersionedTable
 
 
 def latest_per_key(
@@ -51,17 +57,68 @@ def merge_upsert(existing: DataFrame, updates: DataFrame, keys: Sequence[str]) -
 
 
 def read_or_empty(spark: SparkSession, path: str, schema_of: DataFrame) -> DataFrame:
+    # settle a _swap_overwrite that crashed after renaming the old table
+    # aside: a lone path__old is the last complete table, so it takes
+    # its name back; next to path it is the replaced one, so it goes
+    old = f"{path}__old"
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
     if os.path.exists(path):
         return spark.read.parquet(path)
     return spark.createDataFrame([], schema_of.schema)
 
 
-def _atomic_overwrite(df: DataFrame, path: str) -> None:
+def _swap_overwrite(df: DataFrame, path: str) -> None:
+    """Replace the table at ``path`` with ``df``: write a temp dir, rename
+    the old table aside, rename the temp dir in, drop the old table.
+    Some complete table is always on disk (removing the old table first
+    would let a crash before the rename lose every record), but a
+    reader between the renames finds none: crash-safe, not atomic."""
     tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(tmp)
+    old = f"{path}__old"
     if os.path.exists(path):
-        shutil.rmtree(path)
+        os.rename(path, old)
     os.rename(tmp, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def _applied(t: VersionedTable, app: str, txn_version: int) -> bool:
+    """Whether ``app`` already committed ``txn_version`` (or a later
+    one) to ``t`` — the replay guard of every txn-stamped sink."""
+    seen = t.txn(app)
+    return seen is not None and seen[0] >= int(txn_version)
+
+
+def _first_commit(
+    t: VersionedTable,
+    seed: Callable[[], DataFrame],
+    cluster_by: Sequence[str],
+    app: str,
+    txn_version: int,
+) -> bool:
+    """First-commit bootstrap of a sink's target: while ``t`` does not
+    exist, commit ``seed()`` (built only then) as version 1 stamped
+    (``app``, ``txn_version``), so a replay of the creating batch is
+    recognized by later idempotence checks. An empty seed commits
+    nothing: a zero-file version would burn the app's txn slot.
+    ``True`` when the batch is settled here; ``False`` when the caller
+    must apply it to the existing table — including one another writer
+    created after the version check."""
+    if t.version() != 0:
+        return False
+    frame = seed()
+    if frame.isEmpty():
+        return True
+    try:
+        t.create(frame, cluster_by=list(cluster_by), txn_app=app, txn_version=txn_version)
+        return True
+    except (CommitConflict, ValueError):
+        return False  # another writer created the table first — merge
 
 
 def upsert_foreach_batch(path: str, keys: Sequence[str]):
@@ -69,13 +126,15 @@ def upsert_foreach_batch(path: str, keys: Sequence[str]):
     last-write-wins by ``order_col`` (the state op emits per-key
     ordered rows, so the max-ts row is the final record state)."""
 
-    def apply(batch_df: DataFrame, batch_id: int, order_col: str = "ts") -> None:
+    def apply(
+        batch_df: DataFrame, batch_id: int, order_col: str | Sequence[str] = "ts"
+    ) -> None:
         if not batch_df.columns:
             return
         spark = batch_df.sparkSession
         latest = latest_per_key(batch_df, keys, order_col)
         existing = read_or_empty(spark, path, batch_df)
-        _atomic_overwrite(merge_upsert(existing, latest, keys), path)
+        _swap_overwrite(merge_upsert(existing, latest, keys), path)
 
     return apply
 
@@ -151,33 +210,23 @@ def versioned_upsert_foreach_batch(
     batch (distinct batch_id, older data — a backfill racing the live
     stream, or two writers with different lags) from regressing newer
     rows. Within-batch last-write-wins still runs first."""
-    from iotdatapipeline_spark.sources.versioned import VersionedTable
-
-    from iotdatapipeline_spark.sources.versioned import CommitConflict
-
     app = txn_app if txn_app is not None else f"stream-{uuid.uuid4().hex[:12]}"
 
-    def apply(batch_df: DataFrame, batch_id: int, order_col: str = "ts") -> None:
+    def apply(
+        batch_df: DataFrame, batch_id: int, order_col: str | Sequence[str] = "ts"
+    ) -> None:
         if not batch_df.columns:
             return
         latest = latest_per_key(batch_df, keys, order_col)
-        if latest.isEmpty():
-            # an empty first micro-batch must not take the create()
-            # path (zero-file version) nor burn the app's txn slot
-            return
         table = VersionedTable(batch_df.sparkSession, root)
         # txn (app, batch_id): a replayed micro-batch (failure
         # between sink write and offset commit) must not apply twice —
         # including a replay of the CREATING batch, whose txn the
         # create commit records for merge_into's idempotence check.
-        if table.version() == 0:
-            try:
-                table.create(
-                    latest, cluster_by=list(keys), txn_app=app, txn_version=batch_id
-                )
-                return
-            except (CommitConflict, ValueError):
-                pass  # another writer created the table first — merge
+        if _first_commit(table, lambda: latest, keys, app, batch_id):
+            return
+        if latest.isEmpty():
+            return  # an empty micro-batch must not burn the app's txn slot
         table.merge_into(
             latest,
             keys,
@@ -248,12 +297,14 @@ def fanout_foreach_batch(
     per (station, part, plan_date, shift), limpieza rows (K5) routed
     to their own sink. One pass over a cached batch.
 
-    ``versioned_records=True`` sends the K1 upsert through the
-    transactional MERGE target (``updates_path`` becomes a
+    ``versioned_records=True`` sends the K1 upsert through
+    :func:`versioned_upsert_foreach_batch` (``updates_path`` becomes a
     VersionedTable root): copy-on-write rewrites, atomic commits, and
     txn-exactly-once under batch replay — the production
-    configuration. The default plain-parquet overwrite remains the
-    zero-infrastructure fallback.
+    configuration. The default plain-parquet overwrite
+    (:func:`upsert_foreach_batch`) remains the zero-infrastructure
+    fallback. Either way a key's last row wins by ``ts``, ties broken
+    by ``counter``.
 
     ``txn_app`` follows the same contract as
     :func:`versioned_upsert_foreach_batch`: distinct stable id per
@@ -262,47 +313,17 @@ def fanout_foreach_batch(
     process only)."""
 
     app = txn_app if txn_app is not None else f"pipeline-{uuid.uuid4().hex[:12]}"
+    if versioned_records:
+        upsert = versioned_upsert_foreach_batch(updates_path, updates_keys, txn_app=app)
+    else:
+        upsert = upsert_foreach_batch(updates_path, updates_keys)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
             updates = batch_df.filter(F.col("row_kind") == "update")
             _idempotent_append(updates, batch_id, history_path)
-            latest = latest_per_key(updates, updates_keys, ("ts", "counter"))
-            if versioned_records:
-                from iotdatapipeline_spark.sources.versioned import (
-                    CommitConflict,
-                    VersionedTable,
-                )
-
-                table = VersionedTable(batch_df.sparkSession, updates_path)
-                if not latest.isEmpty():
-                    if table.version() == 0:
-                        try:
-                            table.create(
-                                latest,
-                                cluster_by=list(updates_keys),
-                                txn_app=app,
-                                txn_version=batch_id,
-                            )
-                        except (CommitConflict, ValueError):
-                            table.merge_into(
-                                latest,
-                                updates_keys,
-                                txn_app=app,
-                                txn_version=batch_id,
-                            )
-                    else:
-                        table.merge_into(
-                            latest,
-                            updates_keys,
-                            txn_app=app,
-                            txn_version=batch_id,
-                        )
-            else:
-                spark = batch_df.sparkSession
-                existing = read_or_empty(spark, updates_path, updates)
-                _atomic_overwrite(merge_upsert(existing, latest, updates_keys), updates_path)
+            upsert(updates, batch_id, order_col=("ts", "counter"))
             if limpieza_path is not None:
                 limp = batch_df.filter(F.col("row_kind") == "limpieza").select("station", "part")
                 if limp.take(1):
@@ -339,8 +360,6 @@ def cdf_apply_foreach_batch(
     stats/blooms; a fleet of mirrors (per-region serving copies,
     BI extracts) each follow the one change stream instead of
     re-scanning the source."""
-    from iotdatapipeline_spark.sources.versioned import CommitConflict, VersionedTable
-
     app = txn_app if txn_app is not None else f"cdf-apply-{uuid.uuid4().hex[:12]}"
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -354,14 +373,9 @@ def cdf_apply_foreach_batch(
         dels = latest.filter(F.col("_change_type") == "delete").select(*keys)
         ups = latest.filter(F.col("_change_type") != "delete").select(*data_cols)
         t = VersionedTable(batch_df.sparkSession, target_root)
-        if t.version() == 0:
-            if ups.isEmpty():
-                return  # nothing to seed the mirror with yet
-            try:
-                t.create(ups, cluster_by=list(keys), txn_app=app, txn_version=batch_id)
-                return
-            except (CommitConflict, ValueError):
-                pass  # another applier created the mirror first — merge
+        # a batch without upserts has nothing to seed the mirror with
+        if _first_commit(t, lambda: ups, keys, app, batch_id):
+            return
         ups_empty = ups.isEmpty()
         if not dels.isEmpty():
             # a DELETE-ONLY batch must still record its txn on its
@@ -388,10 +402,13 @@ def cdf_apply_foreach_batch(
     return apply
 
 
-def _int_bounds_pred(frame: DataFrame, cols: Sequence[str]) -> str | None:
-    """Integer ``[lo, hi]`` conjunction over ``cols`` for ``scan()``
-    file pruning — ``None`` (no pruning, still exact) when any column
-    is NULL-bearing or non-integer. One 1-row aggregate job."""
+def _bounded_read(
+    t: VersionedTable, frame: DataFrame, cols: Sequence[str], version: int | None = None
+) -> DataFrame:
+    """``t`` at ``version`` (default: head) through a ``scan`` file-pruned
+    to ``frame``'s integer ``[lo, hi]`` on each of ``cols`` — the whole
+    snapshot (no pruning, still exact) when any column is NULL-bearing
+    or non-integer. One 1-row aggregate job."""
     cs = list(cols)
     b = frame.agg(
         *[F.min(c).alias(f"__lo_{c}") for c in cs],
@@ -404,8 +421,89 @@ def _int_bounds_pred(frame: DataFrame, cols: Sequence[str]) -> str | None:
         if b[f"__n_{c}"] == 0 and type(lo) is int and type(hi) is int:
             preds.append(f"{c} >= {lo} AND {c} <= {hi}")
         else:
-            return None
-    return " AND ".join(preds) if preds else None
+            return t.snapshot(version)
+    return t.scan(" AND ".join(preds), version=version) if preds else t.snapshot(version)
+
+
+def _signed():
+    """+1 for rows a change adds (insert, update_postimage), -1 for rows
+    it removes (delete, update_preimage)."""
+    return F.when(
+        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
+    ).otherwise(F.lit(-1))
+
+
+def _maintain_groups(
+    t: VersionedTable,
+    app: str,
+    batch_id: int,
+    gk: list[str],
+    merge_groups: Callable[[], DataFrame],
+    who: str,
+    repair: Callable[[DataFrame, DataFrame], DataFrame | None] | None = None,
+) -> None:
+    """The IVM group lifecycle of the SUM/COUNT and MIN/MAX tiers on an
+    existing view ``t``: a batch applies as TWO commits, dead-group
+    delete then live merge. ``merge_groups()`` returns the affected
+    groups' new totals (``gk``, ``cnt``, aggregates, ``__had_cur``) as
+    one materialized frame; ``repair(merged, live)`` may rework the
+    live rows, or return ``None`` to back off from a lost race."""
+    # exactly-once guard BEFORE computing against the current view:
+    # merge_into would no-op a replayed batch, but the delete step
+    # below must not run for it either
+    if _applied(t, app, batch_id):
+        return
+    merged = merge_groups()
+    # crash recovery (r13): a crash between the delete and the merge
+    # leaves #del recorded without the final stamp; on replay the
+    # deleted groups read no current row, so their recomputed totals
+    # are the EXPECTED negatives — drop them and re-run only the merge.
+    del_applied = _applied(t, app + "#del", batch_id)
+    if del_applied:
+        merged = merged.filter(F.col("__had_cur") | (F.col("cnt") >= 0))
+    # cnt < 0 is IMPOSSIBLE under a correct feed: it means a sign
+    # error, a feed wired without preimages (include_preimages
+    # dropped), or a skipped batch. Silently deleting the group
+    # would mask exactly the divergence exactly-once exists to
+    # prevent — fail loudly instead (r11 advice); only cnt == 0
+    # (all rows of the group deleted) removes the group. But
+    # before declaring divergence, re-check the txn map: a
+    # CONCURRENT refresh that committed this batch while we were
+    # computing makes our arithmetic stale, not wrong — the loser
+    # backs off quietly (r13 advice).
+    neg = merged.filter(F.col("cnt") < 0).limit(1).collect()
+    if neg:
+        if _applied(t, app, batch_id):
+            return
+        raise ValueError(
+            f"{who}: negative maintained count for group "
+            f"{ {k: neg[0][k] for k in gk} } in batch {batch_id} — the change "
+            "feed is missing update preimages or a batch was skipped; the "
+            "view has diverged from the source"
+        )
+    live = merged.filter(F.col("cnt") > 0).drop("__had_cur")
+    if repair is not None:
+        live = repair(merged, live)
+        if live is None:
+            return
+    dead = merged.filter(F.col("cnt") == 0).select(*gk)
+    live_empty = live.isEmpty()
+    if not del_applied and not dead.isEmpty():
+        # last-moment replay re-check: the merge's commit path is
+        # txn-guarded on its own, the delete commit is not
+        if _applied(t, app, batch_id):
+            return
+        # a DELETE-ONLY batch's final commit IS the delete — it
+        # carries the app stamp; otherwise stamp app#del so a
+        # crash before the merge is recoverable (above)
+        t.delete_matching(
+            dead,
+            gk,
+            txn_app=app if live_empty else app + "#del",
+            txn_version=batch_id,
+        )
+    if not live_empty:
+        t.merge_into(live, gk, txn_app=app, txn_version=batch_id)
 
 
 def cdf_ivm_foreach_batch(
@@ -436,19 +534,14 @@ def cdf_ivm_foreach_batch(
     groups. Replays are exactly-once via the txn map — an applied
     batch's deltas can never double-count, which for IVM is the
     difference between convergent and silently wrong."""
-    from iotdatapipeline_spark.sources.versioned import CommitConflict, VersionedTable
-
     app = txn_app if txn_app is not None else f"cdf-ivm-{uuid.uuid4().hex[:12]}"
     gk = list(group_keys)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
             return
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-        ).otherwise(F.lit(-1))
         deltas = (
-            batch_df.withColumn("__s", sign)
+            batch_df.withColumn("__s", _signed())
             .groupBy(*gk)
             .agg(
                 F.sum("__s").cast("long").alias("__d_cnt"),
@@ -458,105 +551,46 @@ def cdf_ivm_foreach_batch(
                 ],
             )
         )
-        spark = batch_df.sparkSession
-        t = VersionedTable(spark, target_root)
-        if t.version() == 0:
-            seed = deltas.filter(F.col("__d_cnt") > 0).select(
+        t = VersionedTable(batch_df.sparkSession, target_root)
+
+        def seed() -> DataFrame:
+            return deltas.filter(F.col("__d_cnt") > 0).select(
                 *gk,
                 F.col("__d_cnt").alias("cnt"),
                 *[F.col(f"__d_{c}").alias(f"sum_{c}") for c in sum_cols],
             )
-            if seed.isEmpty():
-                return
-            try:
-                t.create(seed, cluster_by=gk, txn_app=app, txn_version=batch_id)
-                return
-            except (CommitConflict, ValueError):
-                pass  # lost the create race — fall through and merge
-        # exactly-once guard BEFORE computing against the current view:
-        # merge_into would no-op a replayed batch, but the delete step
-        # below must not run for it either
-        seen = (t._read_manifest(t.version()).get("txns") or {}).get(app)
-        if seen is not None and int(seen[0]) >= int(batch_id):
+
+        if _first_commit(t, seed, gk, app, batch_id):
             return
-        # read the affected groups' totals through a RANGE-bounded scan:
-        # the view is clustered by the group keys, so the delta keys'
-        # [min, max] per key file-prunes the read to the touched band —
-        # O(affected range), never O(view). Non-integer or NULL group
-        # keys fall back to the full snapshot (still correct, just
-        # unpruned — the predicate path must never lose a group).
-        pred = _int_bounds_pred(deltas, gk)
-        cur_src = t.scan(pred) if pred else t.snapshot()
-        cur = cur_src.select(*gk, "cnt", *[f"sum_{c}" for c in sum_cols])
-        merged = deltas.join(cur, gk, "left").select(
-            *gk,
-            F.col("cnt").isNotNull().alias("__had_cur"),
-            (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("__d_cnt")).alias("cnt"),
-            *[
-                (F.coalesce(F.col(f"sum_{c}"), F.lit(0)) + F.col(f"__d_{c}")).alias(
-                    f"sum_{c}"
-                )
-                for c in sum_cols
-            ],
-        )
-        # one materialization of the O(affected groups) frame: the
-        # sanity probe + dead/live splits + both writes below would
-        # otherwise each re-run the key-pruned view scan and join
-        merged = merged.localCheckpoint(eager=True)
 
-        def _applied_now() -> bool:
-            s = (t._read_manifest(t.version()).get("txns") or {}).get(app)
-            return s is not None and int(s[0]) >= int(batch_id)
+        def merge_groups() -> DataFrame:
+            # read the affected groups' totals through a RANGE-bounded
+            # scan: the view is clustered by the group keys, so the
+            # delta keys' [min, max] per key file-prunes the read to
+            # the touched band — O(affected range), never O(view).
+            # Non-integer or NULL group keys fall back to the full
+            # snapshot (still correct, just unpruned — the predicate
+            # path must never lose a group).
+            cur = _bounded_read(t, deltas, gk).select(
+                *gk, "cnt", *[f"sum_{c}" for c in sum_cols]
+            )
+            merged = deltas.join(cur, gk, "left").select(
+                *gk,
+                F.col("cnt").isNotNull().alias("__had_cur"),
+                (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("__d_cnt")).alias("cnt"),
+                *[
+                    (F.coalesce(F.col(f"sum_{c}"), F.lit(0)) + F.col(f"__d_{c}")).alias(
+                        f"sum_{c}"
+                    )
+                    for c in sum_cols
+                ],
+            )
+            # one materialization of the O(affected groups) frame: the
+            # sanity probe + dead/live splits + both writes would
+            # otherwise each re-run the key-pruned view scan and join
+            return merged.localCheckpoint(eager=True)
 
-        # crash recovery (r13): the batch applies as TWO commits —
-        # dead-group delete (stamped app#del) then live merge (stamped
-        # app). A crash between them leaves #del recorded without the
-        # final stamp; on replay the deleted groups read no current
-        # row, so their recomputed totals are the EXPECTED negatives —
-        # drop them and re-run only the merge.
-        dseen = (t._read_manifest(t.version()).get("txns") or {}).get(app + "#del")
-        del_applied = dseen is not None and int(dseen[0]) >= int(batch_id)
-        if del_applied:
-            merged = merged.filter(F.col("__had_cur") | (F.col("cnt") >= 0))
-        # cnt < 0 is IMPOSSIBLE under a correct feed: it means a sign
-        # error, a feed wired without preimages (include_preimages
-        # dropped), or a skipped batch. Silently deleting the group
-        # would mask exactly the divergence exactly-once exists to
-        # prevent — fail loudly instead (r11 advice); only cnt == 0
-        # (all rows of the group deleted) removes the group. But
-        # before declaring divergence, re-check the txn map: a
-        # CONCURRENT refresh that committed this batch while we were
-        # computing makes our arithmetic stale, not wrong — the loser
-        # backs off quietly (r13 advice).
-        neg = merged.filter(F.col("cnt") < 0).limit(1).collect()
-        if neg:
-            if _applied_now():
-                return
-            raise ValueError(
-                f"cdf_ivm_foreach_batch: negative maintained count for group "
-                f"{ {k: neg[0][k] for k in gk} } in batch {batch_id} — the change "
-                "feed is missing update preimages or a batch was skipped; the "
-                "view has diverged from the source"
-            )
-        dead = merged.filter(F.col("cnt") == 0).select(*gk)
-        live = merged.filter(F.col("cnt") > 0).drop("__had_cur")
-        live_empty = live.isEmpty()
-        if not del_applied and not dead.isEmpty():
-            # last-moment replay re-check: the merge's commit path is
-            # txn-guarded on its own, the delete commit is not
-            if _applied_now():
-                return
-            # a DELETE-ONLY batch's final commit IS the delete — it
-            # carries the app stamp; otherwise stamp app#del so a
-            # crash before the merge is recoverable (above)
-            t.delete_matching(
-                dead,
-                gk,
-                txn_app=app if live_empty else app + "#del",
-                txn_version=batch_id,
-            )
-        if not live_empty:
-            t.merge_into(live, gk, txn_app=app, txn_version=batch_id)
+        _maintain_groups(t, app, batch_id, gk, merge_groups, "cdf_ivm_foreach_batch")
 
     return apply
 
@@ -589,15 +623,14 @@ def cdf_ivm_minmax_foreach_batch(
     feed: repairing against a source that has already moved past the
     batch would tear the view), through a key-pruned ``scan`` on the
     view's group keys, so repair cost is O(source rows of the repaired
-    groups), never O(source). Counts drive group lifecycle exactly as
-    in the SUM/COUNT tier: negative count raises (a preimage-less
-    feed), zero deletes the group, replays are txn-exactly-once.
+    groups), never O(source). Counts drive group lifecycle through
+    :func:`_maintain_groups`, shared with the SUM/COUNT tier: negative
+    count raises (a preimage-less feed), zero deletes the group,
+    replays are txn-exactly-once.
 
     Group keys must be SOURCE columns (a repaired group is re-read by
     key); expression-keyed views (bucket = station % 8) stay in the
     self-maintainable tier."""
-    from iotdatapipeline_spark.sources.versioned import CommitConflict, VersionedTable
-
     app = txn_app if txn_app is not None else f"cdf-ivm-mm-{uuid.uuid4().hex[:12]}"
     gk, mnc, mxc = list(group_keys), list(min_cols), list(max_cols)
     if not mnc and not mxc:
@@ -619,10 +652,7 @@ def cdf_ivm_minmax_foreach_batch(
         if ver is None:
             return  # empty batch
         ver = int(ver)
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        b = batch_df.withColumn("__s", sign)
+        b = batch_df.withColumn("__s", _signed())
         aggs = [F.sum("__s").cast("long").alias("__d_cnt")]
         for c in mnc:
             aggs.append(F.min(F.when(F.col("__s") == 1, F.col(c))).alias(f"__i_mn_{c}"))
@@ -633,127 +663,152 @@ def cdf_ivm_minmax_foreach_batch(
         deltas = b.groupBy(*gk).agg(*aggs).localCheckpoint(eager=True)
 
         def repair_agg(groups: DataFrame) -> DataFrame:
-            pred = _int_bounds_pred(groups, gk)
-            base = src.scan(pred, version=ver) if pred else src.snapshot(ver)
-            rows = base.join(groups, gk, "left_semi")
+            rows = _bounded_read(src, groups, gk, ver).join(groups, gk, "left_semi")
             return rows.groupBy(*gk).agg(
                 F.count(F.lit(1)).cast("long").alias("cnt"),
                 *[F.min(c).alias(f"min_{c}") for c in mnc],
                 *[F.max(c).alias(f"max_{c}") for c in mxc],
             )
 
-        if t.version() == 0:
-            # seed = exact re-aggregate of the batch's groups at the
-            # batch version: signed arithmetic cannot seed extremes
-            # when an intra-batch delete removes an intra-batch insert
-            seed = repair_agg(deltas.select(*gk))
-            if seed.isEmpty():
-                return
-            try:
-                t.create(seed, cluster_by=gk, txn_app=app, txn_version=batch_id)
-                return
-            except (CommitConflict, ValueError):
-                pass  # lost the create race — fall through and merge
-        seen = (t._read_manifest(t.version()).get("txns") or {}).get(app)
-        if seen is not None and int(seen[0]) >= int(batch_id):
+        # seed = exact re-aggregate of the batch's groups at the batch
+        # version: signed arithmetic cannot seed extremes when an
+        # intra-batch delete removes an intra-batch insert
+        if _first_commit(t, lambda: repair_agg(deltas.select(*gk)), gk, app, batch_id):
             return
-        pred = _int_bounds_pred(deltas, gk)
-        view_cols = (
-            ["cnt"] + [f"min_{c}" for c in mnc] + [f"max_{c}" for c in mxc]
-        )
-        cur = (t.scan(pred) if pred else t.snapshot()).select(*gk, *view_cols)
-        j = deltas.join(cur, gk, "left")
-        # repair when a deleted value ties-or-beats a stored extreme,
-        # or when a NEW group's batch contains deletes (its extremes
-        # can't be read off the insert side alone)
-        rep = F.lit(False)
-        has_del = F.lit(False)
-        for c in mnc:
-            rep = rep | (
-                F.col(f"__d_mn_{c}").isNotNull()
-                & F.col("cnt").isNotNull()
-                & (F.col(f"__d_mn_{c}") <= F.col(f"min_{c}"))
-            )
-            has_del = has_del | F.col(f"__d_mn_{c}").isNotNull()
-        for c in mxc:
-            rep = rep | (
-                F.col(f"__d_mx_{c}").isNotNull()
-                & F.col("cnt").isNotNull()
-                & (F.col(f"__d_mx_{c}") >= F.col(f"max_{c}"))
-            )
-            has_del = has_del | F.col(f"__d_mx_{c}").isNotNull()
-        rep = rep | (F.col("cnt").isNull() & has_del)
-        merged = j.select(
-            *gk,
-            F.col("cnt").isNotNull().alias("__had_cur"),
-            (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("__d_cnt")).alias("cnt"),
-            rep.alias("__rep"),
-            *[
-                F.least(F.col(f"min_{c}"), F.col(f"__i_mn_{c}")).alias(f"min_{c}")
-                for c in mnc
-            ],
-            *[
-                F.greatest(F.col(f"max_{c}"), F.col(f"__i_mx_{c}")).alias(f"max_{c}")
-                for c in mxc
-            ],
-        ).localCheckpoint(eager=True)
+        view_cols = ["cnt"] + [f"min_{c}" for c in mnc] + [f"max_{c}" for c in mxc]
 
-        def _applied_now() -> bool:
-            s = (t._read_manifest(t.version()).get("txns") or {}).get(app)
-            return s is not None and int(s[0]) >= int(batch_id)
+        def merge_groups() -> DataFrame:
+            cur = _bounded_read(t, deltas, gk).select(*gk, *view_cols)
+            j = deltas.join(cur, gk, "left")
+            # repair when a deleted value ties-or-beats a stored extreme,
+            # or when a NEW group's batch contains deletes (its extremes
+            # can't be read off the insert side alone)
+            beaten = [(f"__d_mn_{c}", F.col(f"__d_mn_{c}") <= F.col(f"min_{c}")) for c in mnc]
+            beaten += [(f"__d_mx_{c}", F.col(f"__d_mx_{c}") >= F.col(f"max_{c}")) for c in mxc]
+            rep = F.lit(False)
+            has_del = F.lit(False)
+            for d, beats in beaten:
+                rep = rep | (F.col(d).isNotNull() & F.col("cnt").isNotNull() & beats)
+                has_del = has_del | F.col(d).isNotNull()
+            rep = rep | (F.col("cnt").isNull() & has_del)
+            return j.select(
+                *gk,
+                F.col("cnt").isNotNull().alias("__had_cur"),
+                (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("__d_cnt")).alias("cnt"),
+                rep.alias("__rep"),
+                *[
+                    F.least(F.col(f"min_{c}"), F.col(f"__i_mn_{c}")).alias(f"min_{c}")
+                    for c in mnc
+                ],
+                *[
+                    F.greatest(F.col(f"max_{c}"), F.col(f"__i_mx_{c}")).alias(f"max_{c}")
+                    for c in mxc
+                ],
+            ).localCheckpoint(eager=True)
 
-        # crash recovery + concurrent-loser backoff: same two-commit
-        # protocol as the SUM/COUNT tier (see cdf_ivm_foreach_batch)
-        dseen = (t._read_manifest(t.version()).get("txns") or {}).get(app + "#del")
-        del_applied = dseen is not None and int(dseen[0]) >= int(batch_id)
-        if del_applied:
-            merged = merged.filter(F.col("__had_cur") | (F.col("cnt") >= 0))
-        neg = merged.filter(F.col("cnt") < 0).limit(1).collect()
-        if neg:
-            if _applied_now():
-                return
-            raise ValueError(
-                f"cdf_ivm_minmax_foreach_batch: negative maintained count for "
-                f"group { {k: neg[0][k] for k in gk} } in batch {batch_id} — the "
-                "change feed is missing update preimages or a batch was skipped"
-            )
-        need = merged.filter(F.col("__rep") & (F.col("cnt") > 0)).select(*gk)
-        live = merged.filter(F.col("cnt") > 0).drop("__rep", "__had_cur")
-        n_need = need.count()
-        if n_need:
+        def repair(merged: DataFrame, live: DataFrame) -> DataFrame | None:
+            # the repair set's groups are re-aggregated from the source
+            need = merged.filter(F.col("__rep") & (F.col("cnt") > 0)).select(*gk)
+            live = live.drop("__rep")
+            n_need = need.count()
+            if not n_need:
+                return live
             fixed = repair_agg(need).localCheckpoint(eager=True)
             if fixed.count() != n_need:
-                if _applied_now():
-                    return  # stale arithmetic from a lost refresh race
+                if _applied(t, app, batch_id):
+                    return None  # stale arithmetic from a lost refresh race
                 raise ValueError(
                     "cdf_ivm_minmax_foreach_batch: repair read found no rows "
                     "for a group whose maintained count is positive — the "
                     "view has diverged from the source"
                 )
-            live = (
+            return (
                 live.join(need.withColumn("__f", F.lit(1)), gk, "left")
                 .filter(F.col("__f").isNull())
                 .drop("__f")
                 .unionByName(fixed)
             )
-        dead = merged.filter(F.col("cnt") == 0).select(*gk)
-        live_empty = live.isEmpty()
-        if not del_applied and not dead.isEmpty():
-            if _applied_now():
-                return  # a concurrent refresh won while we computed
-            # delete-only batches stamp their txn on the delete commit;
-            # otherwise stamp app#del for crash recovery
-            # (see the SUM/COUNT tier)
-            t.delete_matching(
-                dead,
-                gk,
-                txn_app=app if live_empty else app + "#del",
-                txn_version=batch_id,
-            )
-        if not live_empty:
-            t.merge_into(live, gk, txn_app=app, txn_version=batch_id)
+
+        _maintain_groups(
+            t, app, batch_id, gk, merge_groups, "cdf_ivm_minmax_foreach_batch", repair
+        )
 
     return apply
+
+
+#: radix of a two-source view's packed txn cursor ``to_a·10⁹ + to_b``
+#: (monotone when steps apply in order); b's version must stay below it
+CURSOR_RADIX = 10**9
+
+
+def _two_source_step(
+    who: str, A: VersionedTable, B: VersionedTable, va1: int, vb1: int, jk: list[str]
+) -> tuple[int, list[str], list[str]]:
+    """A two-source step's packed txn version for its TO versions, and
+    both sources' column names there — read from the manifests (no
+    listing job), refusing a name the sides share outside the join
+    keys."""
+    if not 0 <= int(vb1) < CURSOR_RADIX:  # b must fit below the packing radix
+        raise ValueError(
+            f"{who}: source b version {vb1} exceeds the packed-cursor radix 10^9"
+        )
+    a_cols = [f.name for f in A._fields_at(va1)]
+    b_cols = [f.name for f in B._fields_at(vb1)]
+    overlap = (set(a_cols) & set(b_cols)) - set(jk)
+    if overlap:
+        raise ValueError(
+            f"{who}: column collision outside join keys: {sorted(overlap)}"
+        )
+    return int(va1) * CURSOR_RADIX + int(vb1), a_cols, b_cols
+
+
+def _delta_join(
+    jk: list[str], out_cols: list[str], a_side: tuple, b_side: tuple
+) -> DataFrame | None:
+    """The signed rows of one delta-join step,
+
+        ΔV = ΔA ⋈ B_old  ∪  A_old ⋈ ΔB  ∪  ΔA ⋈ ΔB
+
+    projected to ``out_cols`` plus their sign ``__net`` (signs multiply:
+    the (A_old+ΔA)(B_old+ΔB) expansion). Each side is ``(table, row
+    key, (from, to), contributed columns)``. ΔA/ΔB come from each
+    table's commit-time change feed over ``(from, to]``; A_old/B_old
+    are the FROM-version snapshots via time travel, stats-pruned by the
+    OTHER side's delta join-key bounds: a 10-row ΔB joins against
+    O(affected) of A, never O(A). ``None`` when neither side advanced."""
+
+    def delta(side: tuple, sign: str) -> DataFrame | None:
+        t, key, (v0, v1), cols = side
+        if v1 <= v0:
+            return None
+        return (
+            t.changes(v0, v1, keys=[key], include_preimages=True)
+            .withColumn(sign, _signed())
+            .select(*cols, sign)
+            .localCheckpoint(eager=True)
+        )
+
+    def old(side: tuple, other_delta: DataFrame) -> DataFrame:
+        t, _, (v0, _), cols = side
+        return _bounded_read(t, other_delta.select(*jk), jk, v0).select(*cols)
+
+    da, db = delta(a_side, "__sa"), delta(b_side, "__sb")
+    terms = []
+    if da is not None:
+        terms.append(
+            da.join(old(b_side, da), jk).select(*out_cols, F.col("__sa").alias("__net"))
+        )
+    if db is not None:
+        terms.append(
+            old(a_side, db).join(db, jk).select(*out_cols, F.col("__sb").alias("__net"))
+        )
+    if da is not None and db is not None:
+        terms.append(
+            da.join(db, jk).select(
+                *out_cols, (F.col("__sa") * F.col("__sb")).alias("__net")
+            )
+        )
+    return reduce(DataFrame.unionByName, terms) if terms else None
 
 
 def cdf_ivm_join_apply(
@@ -771,18 +826,10 @@ def cdf_ivm_join_apply(
 ) -> int:
     """IVM TIER 2, join views (r12): one maintenance step for
     ``V = A ⋈ B`` on ``join_keys`` — the differential delta-join.
-    Instead of re-running the join, the view absorbs exactly
-
-        ΔV = ΔA ⋈ B_old  ∪  A_old ⋈ ΔB  ∪  ΔA ⋈ ΔB
-
-    with signs multiplying (the (A_old+ΔA)(B_old+ΔB) expansion), where
-    ΔA/ΔB come from each table's commit-time change feed over
-    ``v_a = (from, to)`` / ``v_b = (from, to)`` and A_old/B_old are the
-    FROM-version snapshots via time travel — so a step is exact no
-    matter how far either side advanced. The old-side reads are
-    stats-pruned by the OTHER side's delta join-key bounds: a 10-row
-    ΔB joins against O(affected) of A, never O(A). Net effects are
-    reduced per output ROW (sum of signs), upserts merged and
+    Instead of re-running the join, the view absorbs exactly the signed
+    rows :func:`_delta_join` expands over ``v_a = (from, to)`` /
+    ``v_b = (from, to)``, so a step is exact no matter how far either
+    side advanced. Net effects are reduced per output ROW (sum of signs), upserts merged and
     disappearing pairs keyed-DV-deleted on the (``a_key``, ``b_key``)
     pair identity; both tables' rows must be unique in their own key
     (the lakehouse norm this module assumes everywhere).
@@ -801,93 +848,29 @@ def cdf_ivm_join_apply(
     Returns the view's committed version. Cites Prensas.py:300-302
     (the reference recomputes its record⋈parts⋈work_centers probe per
     tick; this maintains the joined state instead)."""
-    from iotdatapipeline_spark.sources.versioned import VersionedTable
-
+    who = "cdf_ivm_join_apply"
     jk = list(join_keys)
     A, B = VersionedTable(spark, a_root), VersionedTable(spark, b_root)
     vt = VersionedTable(spark, view_root)
-    va0, va1 = v_a
-    vb0, vb1 = v_b
     app = txn_app if txn_app is not None else "cdf-ivm-join"
-    if not 0 <= int(vb1) < 10**9:  # b must fit below the packing radix
-        raise ValueError(
-            f"cdf_ivm_join_apply: source b version {vb1} exceeds the "
-            "packed-cursor radix 10^9"
-        )
-    packed = int(va1) * 10**9 + int(vb1)
-
-    a_cols = A.snapshot(va1).columns
-    b_cols = B.snapshot(vb1).columns
-    overlap = (set(a_cols) & set(b_cols)) - set(jk)
-    if overlap:
-        raise ValueError(
-            f"cdf_ivm_join_apply: column collision outside join keys: {sorted(overlap)}"
-        )
+    va1, vb1 = v_a[1], v_b[1]
+    packed, a_cols, b_cols = _two_source_step(who, A, B, va1, vb1, jk)
     out_cols = a_cols + [c for c in b_cols if c not in jk]
 
     if vt.version() == 0 or force_seed:
         seed = A.snapshot(va1).join(B.snapshot(vb1), jk).select(*out_cols)
-        if vt.version() == 0:
-            if seed.isEmpty():
-                return 0
-            from iotdatapipeline_spark.sources.versioned import CommitConflict
-
-            try:
-                return vt.create(
-                    seed, cluster_by=[a_key, b_key], txn_app=app, txn_version=packed
-                )
-            except (CommitConflict, ValueError):
-                pass  # lost the create race — fall through and merge
         # reseed: the caller emptied the view, so the merge re-inserts
         # every pair and stamps the cursor at the TO versions
-        vt.merge_into(seed, [a_key, b_key], txn_app=app, txn_version=packed)
+        if not _first_commit(vt, lambda: seed, [a_key, b_key], app, packed):
+            vt.merge_into(seed, [a_key, b_key], txn_app=app, txn_version=packed)
         return vt.version()
-    seen = (vt._read_manifest(vt.version()).get("txns") or {}).get(app)
-    if seen is not None and int(seen[0]) >= packed:
-        return int(seen[1])  # already applied
+    seen = vt.txn(app)
+    if seen is not None and seen[0] >= packed:
+        return seen[1]  # already applied
 
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    da = db = None
-    if va1 > va0:
-        da = (
-            A.changes(va0, va1, keys=[a_key], include_preimages=True)
-            .withColumn("__sa", sign)
-            .drop("_change_type")
-            .localCheckpoint(eager=True)
-        )
-    if vb1 > vb0:
-        db = (
-            B.changes(vb0, vb1, keys=[b_key], include_preimages=True)
-            .withColumn("__sb", sign)
-            .drop("_change_type")
-            .localCheckpoint(eager=True)
-        )
-    terms = []
-    if da is not None:
-        pred = _int_bounds_pred(da.select(*jk), jk)
-        b_old = B.scan(pred, version=vb0) if pred else B.snapshot(vb0)
-        terms.append(
-            da.join(b_old, jk).select(*out_cols, F.col("__sa").alias("__net"))
-        )
-    if db is not None:
-        pred = _int_bounds_pred(db.select(*jk), jk)
-        a_old = A.scan(pred, version=va0) if pred else A.snapshot(va0)
-        terms.append(
-            a_old.join(db, jk).select(*out_cols, F.col("__sb").alias("__net"))
-        )
-    if da is not None and db is not None:
-        terms.append(
-            da.join(db, jk).select(
-                *out_cols, (F.col("__sa") * F.col("__sb")).alias("__net")
-            )
-        )
-    if not terms:
+    expanded = _delta_join(jk, out_cols, (A, a_key, v_a, a_cols), (B, b_key, v_b, b_cols))
+    if expanded is None:
         return vt.version()  # neither side advanced
-    expanded = terms[0]
-    for t_ in terms[1:]:
-        expanded = expanded.unionByName(t_)
     # reduce per OUTPUT ROW: crossing update pairs cancel exactly here
     # (the ±(a_old,b_old)/(a_new,b_old)/(a_old,b_new) cross terms), so
     # what survives is precisely the rows whose multiplicity changes
@@ -951,21 +934,14 @@ def cdf_ivm_agg_join_apply(
     FULL A⋈B as an intermediate mart: O(|A⋈B|) storage plus write
     amplification on every step — at 100 TB the joined fact is usually
     the biggest table in the house. Here the classic delta rule and
-    the aggregate's linearity compose:
-
-        δ(γ(A ⋈ B)) = γ(ΔA ⋈ B_old  ∪  A_old ⋈ ΔB  ∪  ΔA ⋈ ΔB)
-
-    with signs multiplying across the bilinear expansion and the
-    signed rows folded STRAIGHT into the per-group (d_cnt, d_sum)
-    merge — the joined rows exist only transiently inside one batch's
-    shuffle. Each expansion term reuses the join tier's pruning: the
-    old-side snapshot is read AS OF the step's from-version through a
-    stats-pruned ``scan`` bounded by the OTHER side's delta join-key
-    range, so a 10-row ΔB aggregates against O(affected A), never
-    O(A). The group-level apply delegates to the hardened SUM/COUNT
-    tier (:func:`cdf_ivm_foreach_batch`): key-pruned view merge,
-    negative-count divergence guard, crash-recoverable two-commit
-    protocol, txn exactly-once on the packed ``to_a·10⁹ + to_b``
+    the aggregate's linearity compose, δ(γ(A ⋈ B)) = γ(ΔV): the join
+    tier's signed, bounds-pruned expansion ΔV (:func:`_delta_join`)
+    folds STRAIGHT into the per-group (d_cnt, d_sum) merge — the joined
+    rows exist only transiently inside one batch's shuffle. The
+    group-level apply delegates to the hardened SUM/COUNT
+    tier (:func:`cdf_ivm_foreach_batch`): key-pruned view merge, then
+    :func:`_maintain_groups` — negative-count divergence guard,
+    crash-recoverable two-commit protocol, txn exactly-once on the packed ``to_a·10⁹ + to_b``
     cursor — a replayed step is a clean no-op.
 
     ``group_by``/``sum_cols`` may come from either side (dim
@@ -981,34 +957,17 @@ def cdf_ivm_agg_join_apply(
     Returns the view's committed version. Cites Prensas.py:300-302
     (the reference recomputes its joined per-tick probe; this
     maintains the aggregate of the join at O(Δ) per step)."""
-    from iotdatapipeline_spark.sources.versioned import VersionedTable
-
+    who = "cdf_ivm_agg_join_apply"
     jk, gb, sc = list(join_keys), list(group_by), list(sum_cols)
     A, B = VersionedTable(spark, a_root), VersionedTable(spark, b_root)
     vt = VersionedTable(spark, view_root)
-    va0, va1 = v_a
-    vb0, vb1 = v_b
     app = txn_app if txn_app is not None else "cdf-ivm-aggjoin"
-    if not 0 <= int(vb1) < 10**9:  # b must fit below the packing radix
-        raise ValueError(
-            f"cdf_ivm_agg_join_apply: source b version {vb1} exceeds the "
-            "packed-cursor radix 10^9"
-        )
-    packed = int(va1) * 10**9 + int(vb1)
-
-    a_cols = A.snapshot(va1).columns
-    b_cols = B.snapshot(vb1).columns
-    overlap = (set(a_cols) & set(b_cols)) - set(jk)
-    if overlap:
-        raise ValueError(
-            f"cdf_ivm_agg_join_apply: column collision outside join keys: "
-            f"{sorted(overlap)}"
-        )
+    va1, vb1 = v_a[1], v_b[1]
+    packed, a_cols, b_cols = _two_source_step(who, A, B, va1, vb1, jk)
     missing = (set(gb) | set(sc)) - set(a_cols) - set(b_cols)
     if missing:
         raise ValueError(
-            f"cdf_ivm_agg_join_apply: group/sum columns not in either "
-            f"source: {sorted(missing)}"
+            f"{who}: group/sum columns not in either source: {sorted(missing)}"
         )
     # column pruning at the source: each side contributes its join
     # keys plus only the group/sum columns it owns
@@ -1030,59 +989,20 @@ def cdf_ivm_agg_join_apply(
         )
         sink(seed, packed)
         return vt.version()
-    seen = (vt._read_manifest(vt.version()).get("txns") or {}).get(app)
-    if seen is not None and int(seen[0]) >= packed:
-        return int(seen[1])  # already applied
+    seen = vt.txn(app)
+    if seen is not None and seen[0] >= packed:
+        return seen[1]  # already applied
 
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    da = db = None
-    if va1 > va0:
-        da = (
-            A.changes(va0, va1, keys=[a_key], include_preimages=True)
-            .withColumn("__sa", sign)
-            .select(*a_need, "__sa")
-            .localCheckpoint(eager=True)
-        )
-    if vb1 > vb0:
-        db = (
-            B.changes(vb0, vb1, keys=[b_key], include_preimages=True)
-            .withColumn("__sb", sign)
-            .select(*b_need, "__sb")
-            .localCheckpoint(eager=True)
-        )
-    terms = []
-    if da is not None:
-        pred = _int_bounds_pred(da.select(*jk), jk)
-        b_old = (B.scan(pred, version=vb0) if pred else B.snapshot(vb0)).select(
-            *b_need
-        )
-        terms.append(da.join(b_old, jk).select(*out_cols, F.col("__sa").alias("__s")))
-    if db is not None:
-        pred = _int_bounds_pred(db.select(*jk), jk)
-        a_old = (A.scan(pred, version=va0) if pred else A.snapshot(va0)).select(
-            *a_need
-        )
-        terms.append(a_old.join(db, jk).select(*out_cols, F.col("__sb").alias("__s")))
-    if da is not None and db is not None:
-        terms.append(
-            da.join(db, jk).select(
-                *out_cols, (F.col("__sa") * F.col("__sb")).alias("__s")
-            )
-        )
-    if not terms:
+    expanded = _delta_join(jk, out_cols, (A, a_key, v_a, a_need), (B, b_key, v_b, b_need))
+    if expanded is None:
         return vt.version()  # neither side advanced
-    expanded = terms[0]
-    for t_ in terms[1:]:
-        expanded = expanded.unionByName(t_)
     # each expansion row is one signed joined row: encode the sign as
     # the change type the SUM/COUNT tier folds back into ±1 — the
     # group-level merge, lifecycle and exactly-once all inherit
     feed = expanded.withColumn(
         "_change_type",
-        F.when(F.col("__s") > 0, F.lit("insert")).otherwise(F.lit("delete")),
-    ).drop("__s")
+        F.when(F.col("__net") > 0, F.lit("insert")).otherwise(F.lit("delete")),
+    ).drop("__net")
     before = vt.version()
     sink(feed, packed)
     if vt.version() == before:
@@ -1142,8 +1062,6 @@ def cdf_scd2_foreach_batch(
     destroying prior state; this keeps the lineage)."""
     from pyspark.sql.window import Window
 
-    from iotdatapipeline_spark.sources.versioned import CommitConflict, VersionedTable
-
     app = txn_app if txn_app is not None else f"cdf-scd2-{uuid.uuid4().hex[:12]}"
     ks = list(keys)
 
@@ -1169,23 +1087,13 @@ def cdf_scd2_foreach_batch(
             F.col("__next_v").isNull().alias("is_current"),
         )
         t = VersionedTable(batch_df.sparkSession, target_root)
-        if t.version() == 0:
-            if new_recs.isEmpty():
-                return  # an all-delete batch cannot seed a history
-            try:
-                t.create(
-                    new_recs, cluster_by=ks, txn_app=app, txn_version=batch_id
-                )
-                return
-            except (CommitConflict, ValueError):
-                pass  # lost the create race — fall through and merge
+        # an all-delete batch cannot seed a history
+        if _first_commit(t, lambda: new_recs, ks, app, batch_id):
+            return
         first_v = seq.groupBy(*ks).agg(
             F.min("_commit_version").cast("long").alias("__first_v")
         )
-        pred = _int_bounds_pred(first_v, ks)
-        cur = (t.scan(pred) if pred else t.snapshot()).filter(
-            F.col("is_current")
-        )
+        cur = _bounded_read(t, first_v, ks).filter(F.col("is_current"))
         closed = (
             cur.join(first_v, ks, "inner")
             .withColumn("scd_end", F.col("__first_v"))
@@ -1229,8 +1137,6 @@ def cdf_ivm_kmv_foreach_batch(
     View schema: group_keys + ``kmv`` (array<bigint>) + ``cnt`` (rows
     seen). Per batch: O(batch) hash + per-group set-union against the
     key-pruned affected groups; replays no-op at the txn check."""
-    from iotdatapipeline_spark.sources.versioned import CommitConflict, VersionedTable
-
     app = txn_app if txn_app is not None else f"cdf-ivm-kmv-{uuid.uuid4().hex[:12]}"
     gk = list(group_keys)
 
@@ -1259,28 +1165,18 @@ def cdf_ivm_kmv_foreach_batch(
             )
             .localCheckpoint(eager=True)
         )
-        spark = batch_df.sparkSession
-        t = VersionedTable(spark, target_root)
-        if t.version() == 0:
-            seed = deltas.select(
+        t = VersionedTable(batch_df.sparkSession, target_root)
+
+        def seed() -> DataFrame:
+            return deltas.select(
                 *gk,
                 F.col("__b_kmv").alias("kmv"),
                 F.col("__b_cnt").alias("cnt"),
             )
-            if seed.isEmpty():
-                return
-            try:
-                t.create(seed, cluster_by=gk, txn_app=app, txn_version=batch_id)
-                return
-            except (CommitConflict, ValueError):
-                pass  # lost the create race — fall through and merge
-        seen = (t._read_manifest(t.version()).get("txns") or {}).get(app)
-        if seen is not None and int(seen[0]) >= int(batch_id):
+
+        if _first_commit(t, seed, gk, app, batch_id) or _applied(t, app, batch_id):
             return
-        pred = _int_bounds_pred(deltas, gk)
-        cur = (t.scan(pred) if pred else t.snapshot()).select(
-            *gk, "kmv", "cnt"
-        )
+        cur = _bounded_read(t, deltas, gk).select(*gk, "kmv", "cnt")
         merged = deltas.join(cur, gk, "left").select(
             *gk,
             F.slice(

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -24,6 +25,16 @@ READINGS_SCHEMA = (
 )
 
 
+def _pin_replay_order(paths: list[str]) -> None:
+    """Give ``paths`` strictly increasing mtimes, one second apart, in
+    list order. FileStreamSource orders new files by mtime in
+    milliseconds, so two files written within the same millisecond tie
+    and can replay in either order."""
+    base = time.time() - len(paths)
+    for i, p in enumerate(paths):
+        os.utime(p, (base + i, base + i))
+
+
 def stage_replay_chunks(
     spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 10
 ) -> str:
@@ -31,10 +42,11 @@ def stage_replay_chunks(
     parquet files so a file stream replays them in event-time order
     (the reference's arrival order IS its processing order, T6).
     Replay order is by file MODIFICATION time (FileStreamSource sorts
-    new files by mtime, not name); sequential writes here make mtimes
-    strictly increase. Anything else that delivers files into a replay
-    dir must set increasing mtimes explicitly (see the checkpoint-
-    recovery test) or chunks can interleave out of time order.
+    new files by mtime, not name), so the chunks get strictly
+    increasing mtimes (:func:`_pin_replay_order`). Anything else that
+    delivers files into a replay dir must set increasing mtimes
+    explicitly (see the checkpoint-recovery test) or chunks can
+    interleave out of time order.
     Timestamps are written as microseconds — the engine's canonical
     unit (see sources.tables on the nanos fixture quirk)."""
     if os.path.exists(out_dir):
@@ -51,14 +63,17 @@ def stage_replay_chunks(
     ).orderBy("ts", "event_id")
     pdf = readings.toPandas()
     chunk = max(1, (len(pdf) + n_chunks - 1) // n_chunks)
+    paths = []
     for i in range(0, len(pdf), chunk):
         table = pa.Table.from_pandas(pdf.iloc[i : i + chunk], preserve_index=False)
+        paths.append(os.path.join(out_dir, f"chunk_{i // chunk:05d}.parquet"))
         pq.write_table(
             table,
-            os.path.join(out_dir, f"chunk_{i // chunk:05d}.parquet"),
+            paths[-1],
             coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
+    _pin_replay_order(paths)
     return out_dir
 
 
@@ -118,14 +133,17 @@ def stage_ooo_replay_chunks(
         "chunk", F.ntile(n_chunks).over(Window.orderBy("arrival_ts", "event_id", "copy"))
     )
     pdf = arr.orderBy("arrival_ts", "event_id", "copy").toPandas()
+    paths = []
     for c in sorted(pdf["chunk"].unique()):
         sub = pdf[pdf["chunk"] == c][["station", "part", "ts", "event_id", "value", "counter"]]
+        paths.append(os.path.join(out_dir, f"chunk_{c:05d}.parquet"))
         pq.write_table(
             pa.Table.from_pandas(sub, preserve_index=False),
-            os.path.join(out_dir, f"chunk_{c:05d}.parquet"),
+            paths[-1],
             coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
+    _pin_replay_order(paths)
     return out_dir
 
 
@@ -176,11 +194,11 @@ def stage_bounded_replay(
     if os.path.exists(out_dir):
         shutil.rmtree(out_dir)
     os.makedirs(out_dir)
+    paths = []
     for seq, chunk_id in enumerate(consumed):
-        shutil.copy(
-            os.path.join(staging, produced[chunk_id]),
-            os.path.join(out_dir, f"recv_{seq:05d}_chunk_{chunk_id:05d}.parquet"),
-        )
+        paths.append(os.path.join(out_dir, f"recv_{seq:05d}_chunk_{chunk_id:05d}.parquet"))
+        shutil.copy(os.path.join(staging, produced[chunk_id]), paths[-1])
+    _pin_replay_order(paths)
     return out_dir, consumed, dropped
 
 

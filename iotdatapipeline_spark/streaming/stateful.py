@@ -116,7 +116,7 @@ def _advance(
 ) -> tuple[list[dict[str, Any]], tuple]:
     """The T4 transition as an executable spec: apply one sorted batch
     of readings to (prev, base_ct, corrida, last_tod, initialized),
-    returning (emitted rows, new state). Both backends execute
+    returning (emitted rows, new state). The state function executes
     ``_transition_batch`` (the vectorized hot path, which calls into
     this for row mode); reference mode is pinned to this function
     bit-for-bit by randomized equivalence tests, so the semantics
@@ -168,8 +168,8 @@ def _transition_batch(
     state_tuple: tuple,
     emit_mode: str,
 ) -> tuple[pd.DataFrame | None, tuple, int]:
-    """Sort + transition ONE batch for a key; the shared hot path of
-    both stateful backends. Returns (output frame or None, new state,
+    """Sort + transition ONE batch for a key; the hot path of the
+    state function. Returns (output frame or None, new state,
     batch max event-time ms).
 
     Reference mode runs a fully vectorized formulation: numpy lexsort
@@ -339,102 +339,19 @@ def make_state_fn(
     return fn
 
 
-def transform_with_state_available() -> bool:
-    """The transformWithState runtime needs a working google.protobuf
-    (Spark's streaming Python runner speaks protobuf to the JVM). Gate
-    the backend on it instead of failing mid-query — some environments
-    (including this build container) ship pyspark without a usable
-    protobuf."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class CounterStateProcessor:
-    """T4 on the ``transformWithState`` API (Spark 4's successor to
-    ``applyInPandasWithState``: typed per-key state handles, explicit
-    timers). Same ``_transition_batch`` hot path, so the two backends
-    cannot drift. Instantiated lazily per executor by Spark."""
-
-    def __init__(self, emit_mode: str = "reference", timeout_ms: int | None = None):
-        if emit_mode not in ("reference", "row"):
-            raise ValueError(f"emit_mode must be 'reference' or 'row', got {emit_mode!r}")
-        self._emit_mode = emit_mode
-        self._timeout_ms = timeout_ms
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("counter_state", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timer_values) -> Iterator[pd.DataFrame]:
-        station, part = key
-        chunks = list(rows)
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        stored = tuple(self._state.get()) if self._state.exists() else None
-        current = stored[:5] if stored else _FRESH_STATE
-        prior_max_ms = (stored[5] if stored and len(stored) > 5 else None) or 0
-        out_pdf, new_state, m_ms = _transition_batch(station, part, pdf, current, self._emit_mode)
-        m_ms = max(m_ms, prior_max_ms)
-        self._state.update(new_state + (m_ms,))
-        if self._timeout_ms is not None:
-            self._handle.registerTimer(timer_values.getCurrentProcessingTimeInMs() + self._timeout_ms)
-        if out_pdf is not None:
-            yield out_pdf
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info) -> Iterator[pd.DataFrame]:
-        station, part = key
-        self._state.clear()
-        yield pd.DataFrame([_limpieza_row(station, part)])
-
-    def handleInitialState(self, key, initial_state, timer_values) -> None:  # pragma: no cover
-        pass
-
-    def close(self) -> None:
-        pass
-
-
 def counter_state_machine(
     readings: DataFrame,
     *,
     emit_mode: str = "reference",
     timeout_ms: int | None = None,
     timeout_mode: str = "processing",
-    backend: str = "applyInPandas",
 ) -> DataFrame:
-    """Group by (station, part) and run the T4 state machine. Input
-    needs columns: station, part, ts, event_id, counter.
+    """Group by (station, part) and run the T4 state machine on
+    ``applyInPandasWithState``. Input needs columns: station, part, ts,
+    event_id, counter.
 
     ``timeout_mode="event"`` (see make_state_fn) needs a watermark on
-    ``ts`` upstream and the applyInPandas backend.
-
-    ``backend``: ``"applyInPandas"`` (applyInPandasWithState, default)
-    or ``"transformWithState"`` (the Spark 4 typed-state API). Both run
-    the same ``_advance`` transition; the equivalence test holds their
-    outputs identical."""
-    if timeout_mode == "event" and backend != "applyInPandas":
-        raise ValueError("timeout_mode='event' is implemented on the applyInPandas backend")
-    if backend == "transformWithState":
-        if not transform_with_state_available():
-            raise RuntimeError(
-                "transformWithState backend needs a working google.protobuf; "
-                "use backend='applyInPandas' in this environment"
-            )
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class _Proc(CounterStateProcessor, StatefulProcessor):
-            pass
-
-        return readings.groupBy("station", "part").transformWithStateInPandas(
-            statefulProcessor=_Proc(emit_mode, timeout_ms),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="processingTime" if timeout_ms is not None else "none",
-        )
-    if backend != "applyInPandas":
-        raise ValueError(f"unknown backend {backend!r}")
+    ``ts`` upstream."""
     if timeout_ms is None:
         timeout = GroupStateTimeout.NoTimeout
     elif timeout_mode == "event":

@@ -114,6 +114,57 @@ class TestMergeJobBudget:
             (51, 5, 0, "insert"),
         ]
 
+    def test_fanout_versioned_batch_job_count(self, spark, tmp_path):
+        """One ``stream_narrow``-shaped fan-out batch against an existing
+        records table: history append, K1 versioned merge and limpieza
+        route: 20 jobs when the fan-out still ran its own copy of the K1
+        executor, the budget kept since it calls
+        ``versioned_upsert_foreach_batch``."""
+        import datetime as dt
+
+        from iotdatapipeline_spark.streaming.sinks import fanout_foreach_batch
+        from iotdatapipeline_spark.streaming.stateful import OUTPUT_SCHEMA
+
+        day, t0 = dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 9, 0)
+
+        def batch(i):
+            rows = [
+                (s, "p", t0 + dt.timedelta(seconds=i), 10 * i + s, 0, 1, i, False, 1, day, "update")
+                for s in range(6)
+            ]
+            rows.append((7, "p", t0, 0, 0, 0, 0, False, 1, day, "limpieza"))
+            return spark.createDataFrame(rows, OUTPUT_SCHEMA)
+
+        sink = fanout_foreach_batch(
+            updates_path=str(tmp_path / "records"),
+            updates_keys=["station", "part", "plan_date", "shift_id"],
+            history_path=str(tmp_path / "history"),
+            limpieza_path=str(tmp_path / "limpieza"),
+            versioned_records=True,
+            txn_app="fanout",
+        )
+        sink(batch(0), 0)
+        _, jobs = _jobs(spark, lambda: sink(batch(1), 1))
+        t = VersionedTable(spark, str(tmp_path / "records"))
+        assert t.version() == 2 and t.txn("fanout") == (1, 2)
+        assert len(jobs) <= 20, jobs
+
+    def test_view_refresh_update_and_delete_job_count(self, spark, tmp_path):
+        """One SUM/COUNT ``MaterializedView.refresh`` over a source update
+        plus a delete: one group stays live, one dies. 37 jobs when each
+        IVM tier ran its own copy of the group lifecycle, the budget kept
+        since they share ``_maintain_groups``."""
+        src = _clustered(spark, str(tmp_path / "src"), 40, 2)
+        mv = MaterializedView.create(
+            spark, str(tmp_path / "mv"), src.root, group_by=["k"], sum_cols=["v"], keys=["k"]
+        )
+        src.merge_into(spark.createDataFrame([Row(k=2, v=7, g=0)]), ["k"])
+        src.delete_where("k = 4")
+        _, jobs = _jobs(spark, mv.refresh)
+        got = {r["k"]: (r["cnt"], r["sum_v"]) for r in mv.snapshot().collect()}
+        assert got[2] == (1, 7) and 4 not in got and len(got) == 39
+        assert len(jobs) <= 37, jobs
+
 
 # ── clause matrix ────────────────────────────────────────────────────────
 

@@ -178,16 +178,6 @@ class TestStateFnUnit:
         assert list(out["row_kind"]) == ["limpieza"]
         assert st.removed
 
-    def test_event_timeout_requires_applyinpandas_backend(self):
-        import pytest
-
-        from iotdatapipeline_spark.streaming.stateful import counter_state_machine
-
-        with pytest.raises(ValueError, match="applyInPandas"):
-            counter_state_machine(
-                None, timeout_ms=1, timeout_mode="event", backend="transformWithState"
-            )
-
 
 class TestReferenceSimulatorParity:
     """'reference' mode vs an independent pure-Python simulation of the
@@ -1016,54 +1006,6 @@ class TestSinks:
             cow(spark.createDataFrame(rows, "k int, ts int, v string"), i)
         cow_got = {r["k"]: r["v"] for r in VersionedTable(spark, root2).snapshot().collect()}
         assert cow_got == got
-
-
-@pytest.mark.slow
-class TestTransformWithStateBackend:
-    def test_backends_produce_identical_output(self, spark, sf_small, tmp_path):
-        """Both stateful backends share the _advance transition; when
-        the transformWithState runtime is available their streamed
-        outputs must be identical."""
-        from iotdatapipeline_spark.streaming.stateful import (
-            counter_state_machine,
-            transform_with_state_available,
-        )
-
-        if not transform_with_state_available():
-            pytest.skip("google.protobuf unavailable: transformWithState runtime cannot start")
-        replay = stage_replay_chunks(spark, sf_small, str(tmp_path / "replay"), n_chunks=4)
-        outs = {}
-        for backend in ("applyInPandas", "transformWithState"):
-            stream = readings_stream(spark, replay)
-            out = counter_state_machine(stream, emit_mode="reference", backend=backend)
-            name = f"be_{backend}"
-            q = (
-                out.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", str(tmp_path / f"ckpt_{backend}"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-            outs[backend] = spark.table(name).select(
-                "station", "part", "counter", "prev_counter", "delta", "qty_running"
-            )
-        a, b = outs["applyInPandas"], outs["transformWithState"]
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
-
-    def test_unavailable_backend_raises_cleanly(self, spark):
-        from iotdatapipeline_spark.streaming.stateful import (
-            counter_state_machine,
-            transform_with_state_available,
-        )
-
-        if transform_with_state_available():
-            pytest.skip("runtime available; the guard path is not reachable")
-        df = spark.createDataFrame([], "station bigint, part string, ts timestamp, event_id bigint, counter bigint")
-        with pytest.raises(RuntimeError, match="protobuf"):
-            counter_state_machine(df, backend="transformWithState")
 
 
 @pytest.mark.slow
