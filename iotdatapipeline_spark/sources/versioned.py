@@ -2213,15 +2213,18 @@ class VersionedTable:
         upsert-with-quality-floor is ``when_matched_condition`` +
         ``when_not_matched_condition`` in one MERGE).
 
-        ``strategy`` picks the physical write: ``"cow"``
-        (copy-on-write, default) rewrites every file holding a matched
-        key — zero read-side overhead afterwards, right when updates
-        cluster with the file layout; ``"mor"`` (merge-on-read) writes
-        deletion-vector entries for the matched preimages and APPENDS
-        the postimages in one commit — O(changed rows) write cost,
-        right for scattered keys on a large table (see
-        :meth:`_merge_into_mor` for the measured trade). Both commit
-        the identical logical snapshot.
+        ``strategy`` picks only how the removed rows leave the table;
+        which rows are removed, kept, inserted and reported is the same
+        for both, so both commit the identical snapshot and change rows.
+        ``"cow"`` (copy-on-write, default) rewrites every file holding a
+        removed row — zero read-side overhead afterwards, right when
+        updates cluster with the file layout. ``"mor"`` (merge-on-read)
+        writes deletion-vector entries for the removed rows and APPENDS
+        the inserts — O(changed rows) write cost, right for scattered
+        keys on a large table (the reference's per-tick K1 shape), paid
+        back as a read-side DV anti-join until ``optimize()`` or a COW
+        merge materializes the deletes (measured trade: BASELINE.md r9,
+        "Merge-on-read UPSERT via deletion vectors").
 
         ``txn_app``/``txn_version`` make the merge EXACTLY-ONCE under
         replay — Delta's txn protocol: each commit carries a per-app
@@ -2258,23 +2261,13 @@ class VersionedTable:
         if (txn_app is None) != (txn_version is None):
             raise ValueError("txn_app and txn_version must be passed together")
         keys = list(keys)
-        nmbs_cond = (
-            not_matched_by_source_condition if not_matched_by_source == "delete" else None
+        nmbs_cond = not_matched_by_source_condition
+        mor = strategy == "mor"
+        op = (
+            f"merge:{when_matched}"
+            + ("+syncdel" if not_matched_by_source == "delete" else "")
+            + (":mor" if mor else "")
         )
-        if strategy == "mor":
-            return self._merge_into_mor(
-                source,
-                keys,
-                when_matched,
-                max_retries,
-                txn_app,
-                txn_version,
-                schema_evolution,
-                not_matched_by_source,
-                nmbs_cond,
-                when_matched_condition,
-                when_not_matched_condition,
-            )
         # one computation of the source per call: the key bounds, the
         # match probe, the insert write and the change files all read it
         # (each of those jobs used to re-run the source plan). Persisted
@@ -2401,9 +2394,8 @@ class VersionedTable:
                             .collect()
                         }
                 cluster_by = m.get("cluster_by") or None
-                untouched = [f for f in m["files"] if f not in touched]
-                rewritten: list[str] = []
                 touched_df = None
+                kept = None
                 cdf_replaced = None
                 cdf_nmbs_del = None
                 if touched:
@@ -2411,14 +2403,17 @@ class VersionedTable:
                     # old-schema and an evolved file, an inferred read that
                     # picked the old footer would rewrite the kept rows of
                     # the evolved file WITHOUT their evolved-column values —
-                    # permanent data loss committed into the new version
-                    touched_df = self._read_data(m, sorted(touched))
+                    # permanent data loss committed into the new version.
+                    # MOR also reads (__file, __pos), the DV coordinates of
+                    # the removed rows (live rows only: a row an existing DV
+                    # already deletes is never recorded again)
+                    touched_df = self._read_data(m, sorted(touched), with_pos=mor)
                     kept = touched_df.join(replaced_keys, keys, "left_anti")
-                    # commit-time CDF capture: the rows the rewrite REMOVES
-                    # — replaced rows (update preimages / matched deletes)
-                    # and the not-matched-by-source deletions — computed as
-                    # the exact complement of `kept`, lazily (they feed one
-                    # change-file write job before the commit)
+                    # the rows the merge REMOVES — replaced rows (update
+                    # preimages / matched deletes) and the not-matched-by-
+                    # source deletions — computed as the exact complement
+                    # of `kept`, lazily: they feed the change files, and
+                    # under MOR the DV write
                     cdf_replaced = touched_df.join(replaced_keys, keys, "left_semi")
                     if nmbs_pred is not None:
                         if wm_pred is None:
@@ -2444,9 +2439,6 @@ class VersionedTable:
                                 .filter(~(F.col("__in_src").isNull() & nmbs_pred))
                                 .drop("__in_src")
                             )
-                    rewritten += self._write_files_mapped(
-                        kept, m, n_files=max(1, len(touched)), cluster_by=cluster_by
-                    )
                 if when_matched == "update":
                     # with a matched-condition, cond-false source rows are
                     # dropped (neither update nor insert)
@@ -2491,27 +2483,62 @@ class VersionedTable:
                     sorted(_phys_conflicts(m)),
                 )
                 self._check_constraints(ins, m)
-                # no emptiness probe: the write drops zero-row parts, so
-                # an empty insert writes no file
-                if cluster_by:
-                    # keep the INSERT files clustered too: without this
-                    # every merge appends one unclustered file per
-                    # source partition (measured: 32 tiny files per
-                    # micro-batch), and future merges/scans cannot
-                    # prune them. File count follows the merge's own
-                    # locality (like the kept-rewrite), with optimize()
-                    # as the long-run compactor.
-                    added = self._write_files_mapped(
-                        ins, m, n_files=max(1, len(touched)), cluster_by=cluster_by
-                    )
+                # the strategy's one branch: how the removed rows leave the
+                # table. `gone` is the files the commit drops, `written`
+                # the files it adds, `new_dvs` its DV map (None: no new DV)
+                new_dvs = None
+                if mor:
+                    # merge-on-read: DV entries kill the removed rows in
+                    # place and the inserts append; no data file is dropped
+                    gone: set[str] = set()
+                    if touched:
+                        removed = (
+                            cdf_replaced
+                            if cdf_nmbs_del is None
+                            else cdf_replaced.unionByName(cdf_nmbs_del)
+                        )
+                        new_dvs = self._build_dvs(
+                            m,
+                            probe_files,
+                            removed.select(
+                                F.col("__file").alias("file"), F.col("__pos").alias("pos")
+                            ),
+                        )
+                    # clustered so future merges/scans can prune the
+                    # appended files; zero-row parts of a small source are
+                    # dropped by _write_files
+                    written = self._write_files_mapped(ins, m, cluster_by=cluster_by)
+                    n_cdf = len(probe_files)
                 else:
-                    added = self._write_files_mapped(ins, m)
-                if not added and not touched:
+                    # copy-on-write: the touched files are replaced by their
+                    # kept rows plus the inserts
+                    gone = touched
+                    written = []
+                    if touched:
+                        written += self._write_files_mapped(
+                            kept, m, n_files=max(1, len(touched)), cluster_by=cluster_by
+                        )
+                    # no emptiness probe: the write drops zero-row parts, so
+                    # an empty insert writes no file
+                    if cluster_by:
+                        # keep the INSERT files clustered too: without this
+                        # every merge appends one unclustered file per
+                        # source partition (measured: 32 tiny files per
+                        # micro-batch), and future merges/scans cannot
+                        # prune them. File count follows the merge's own
+                        # locality (like the kept-rewrite), with optimize()
+                        # as the long-run compactor.
+                        written += self._write_files_mapped(
+                            ins, m, n_files=max(1, len(touched)), cluster_by=cluster_by
+                        )
+                    else:
+                        written += self._write_files_mapped(ins, m)
+                    n_cdf = len(touched)
+                if not written and not touched:
                     return base  # no-op merge
-                rewritten += added
                 # commit-time CDF: a pure append's added files ARE the feed
                 # (mode "data", zero extra write — the streaming-sink common
-                # case); anything touching existing rows writes explicit
+                # case); anything removing existing rows writes explicit
                 # change files (O(changed rows), one job)
                 if not touched:
                     cdf_rec: dict | None = {"mode": "data"}
@@ -2532,29 +2559,28 @@ class VersionedTable:
                             (ins, "insert"),
                         ]
                     cdf_names = self._write_cdf_files(
-                        parts, committed_schema, n_files=max(1, len(touched))
+                        parts, committed_schema, n_files=max(1, n_cdf)
                     )
                     cdf_rec = (
                         {"mode": "files", "files": cdf_names}
                         if cdf_names
                         else {"mode": "none"}
                     )
+                carried = [f for f in m["files"] if f not in gone]
                 stat_cols = list(dict.fromkeys((cluster_by or []) + keys))
-                rewritten_stats = self._collect_stats_mapped(rewritten, stat_cols, m)
-                new_stats = {f: stats[f] for f in untouched if f in stats}
-                new_stats.update(rewritten_stats)
-                # rewritten files were read THROUGH their DVs (_read_data),
+                written_stats = self._collect_stats_mapped(written, stat_cols, m)
+                new_stats = {f: stats[f] for f in carried if f in stats}
+                new_stats.update(written_stats)
+                # COW read the dropped files THROUGH their DVs (_read_data),
                 # so the rewrite materializes pending deletes and the new
-                # files start DV-free; untouched files keep their mappings
+                # files start DV-free; carried files keep their mappings
                 m_dvs = m.get("dvs") or {}
-                new_dvs = {f: list(m_dvs[f]) for f in untouched if f in m_dvs}
-                op = f"merge:{when_matched}" + (
-                    "+syncdel" if not_matched_by_source == "delete" else ""
-                )
+                if new_dvs is None:
+                    new_dvs = {f: list(m_dvs[f]) for f in carried if f in m_dvs}
                 try:
                     self._try_commit(
                         base,
-                        untouched + rewritten,
+                        carried + written,
                         op,
                         cluster_by,
                         txn_app,
@@ -2570,7 +2596,9 @@ class VersionedTable:
                     # logical conflict check first: when the intervening
                     # commits are provably disjoint from this merge's read
                     # set, re-commit the finished files against the new
-                    # head (metadata-only) instead of re-running the merge
+                    # head (metadata-only) instead of re-running the merge.
+                    # COW drops its touched files; MOR drops none and layers
+                    # its NEW DV entries over the head's map
                     rb = self._rebase_merge_commit(
                         base,
                         probe_files,
@@ -2584,9 +2612,13 @@ class VersionedTable:
                         committed_schema=committed_schema,
                         new_identity=new_identity,
                         cdf_rec=cdf_rec,
-                        touched=touched,
-                        new_files=rewritten,
-                        new_file_stats=rewritten_stats,
+                        touched=gone,
+                        new_files=written,
+                        new_file_stats=written_stats,
+                        dv_delta={
+                            f: [d for d in v if d not in (m_dvs.get(f) or [])]
+                            for f, v in new_dvs.items()
+                        },
                     )
                     if rb is not None:
                         return rb
@@ -2614,8 +2646,7 @@ class VersionedTable:
         existing files stay old-schema on disk and the explicit-schema
         read fills the added columns with null (Delta's mergeSchema
         semantics without rewriting history). Without it the insert is
-        projected to the base columns. Shared by the COW and
-        merge-on-read merge paths.
+        projected to the base columns.
 
         TYPES are reconciled too, not just names — a source column
         wider than the table's (bigint into int) written as-is would
@@ -2715,290 +2746,6 @@ class VersionedTable:
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in committed]
         )
         return ins, StructType(committed).json()
-
-    def _merge_into_mor(
-        self,
-        source: DataFrame,
-        keys: list[str],
-        when_matched: str,
-        max_retries: int,
-        txn_app: str | None,
-        txn_version: int | None,
-        schema_evolution: bool,
-        not_matched_by_source: str | None = None,
-        nmbs_cond: str | None = None,
-        when_matched_condition: str | None = None,
-        when_not_matched_condition: str | None = None,
-    ) -> int:
-        """Merge-on-read MERGE (``strategy="mor"``): ONE commit that
-        (a) writes deletion-vector entries for every matched live row
-        — killing the preimages without rewriting their files — and
-        (b) appends the postimage/insert rows as new files. The COW
-        path rewrites every file containing a matched key; for the
-        scattered-key upsert (the reference's K1 shape, Prensas.py:
-        216-223 — every tick updates a different key) that is O(touched
-        bytes) where this is O(changed rows): the r8 delete measurement
-        (scattered 1% → 64/64 files, 36.3 MB COW vs 0.051 MB DV)
-        applies with equal force here (r9 trade table in BASELINE.md).
-
-        Semantics match the COW merge exactly — same key-bounds file
-        pruning, existing DVs applied before matching, txn exactly-once
-        map, optimistic-concurrency retry, schema evolution — and the
-        snapshot after either path is identical, so CDF (``changes()``,
-        a snapshot diff) emits the same insert/update rows across it.
-        The trade is the read-side DV anti-join until ``optimize()`` or
-        a COW merge materializes the pending deletes."""
-        src_keys = source.select(*keys).distinct()
-        for _ in range(max_retries):
-            base = self.version()
-            if base == 0:
-                raise ValueError("merge_into target does not exist; create() it first")
-            m = self._read_manifest(base)
-            if txn_app is not None:
-                seen = self._txn_in(m, txn_app)
-                if seen is not None and seen[0] >= int(txn_version):
-                    return seen[1]  # already applied (batch replay)
-            cluster_by = m.get("cluster_by") or None
-            candidates = self._candidates_by_key_bounds(m, src_keys, keys)
-            # WHEN NOT MATCHED BY SOURCE scope (see the COW path): the
-            # condition's range bounds prune the in-scope files; the
-            # deletes land as DV entries like everything else here
-            nmbs_pred = None
-            if not_matched_by_source == "delete":
-                nmbs_scope = self._keep_files(
-                    m, _extract_ranges(nmbs_cond) if nmbs_cond else {}
-                )
-                candidates = sorted(set(candidates) | set(nmbs_scope))
-                nmbs_pred = (
-                    F.coalesce(F.expr(nmbs_cond).cast("boolean"), F.lit(False))
-                    if nmbs_cond
-                    else F.lit(True)
-                )
-            wm_pred = None
-            if when_matched_condition is not None:
-                wm_pred = F.coalesce(
-                    F.expr(when_matched_condition).cast("boolean"), F.lit(False)
-                )
-            live = None
-            matched_pairs = None
-            matched_false_keys = None
-            if candidates:
-                # live rows only (existing DVs subtracted): a row already
-                # deleted must not be re-recorded in a new DV
-                live = self._read_data(m, candidates, with_pos=True)
-                if wm_pred is not None:
-                    from functools import reduce as _reduce
-
-                    eq = _reduce(
-                        lambda a, b: a & b,
-                        [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
-                    )
-                    matched_pairs = live.alias("t").join(source.alias("s"), eq, "inner")
-                    tkeys = [F.col(f"t.{k}").alias(k) for k in keys]
-                    # localCheckpoint: these tiny key frames gate THREE
-                    # downstream jobs (DV hits, kept rewrite, insert) —
-                    # without it each job re-runs the probe×source join
-                    matched_true_keys = (
-                        matched_pairs.filter(wm_pred)
-                        .select(*tkeys)
-                        .distinct()
-                        .localCheckpoint(eager=True)
-                    )
-                    matched_false_keys = (
-                        matched_pairs.select(*tkeys)
-                        .distinct()
-                        .join(matched_true_keys, keys, "left_anti")
-                        .localCheckpoint(eager=True)
-                    )
-            if when_matched == "update":
-                inserted = (
-                    source
-                    if matched_false_keys is None
-                    else source.join(matched_false_keys, keys, "left_anti")
-                )
-            else:
-                # delete matched; still insert the not-matched source rows
-                if live is not None:
-                    matched_keys = live.join(src_keys, keys, "left_semi").select(*keys).distinct()
-                    inserted = source.join(matched_keys, keys, "left_anti")
-                else:
-                    inserted = source
-            if when_not_matched_condition is not None:
-                # WHEN NOT MATCHED AND <cond> THEN INSERT — fresh rows
-                # only; matched postimages flow through (see COW path)
-                wnm_pred = F.coalesce(
-                    F.expr(when_not_matched_condition).cast("boolean"), F.lit(False)
-                )
-                if when_matched == "update" and live is not None:
-                    mkeys = (
-                        matched_true_keys
-                        if matched_pairs is not None
-                        else live.join(src_keys, keys, "left_semi")
-                        .select(*keys)
-                        .distinct()
-                    )
-                    inserted = inserted.join(mkeys, keys, "left_semi").unionByName(
-                        inserted.join(mkeys, keys, "left_anti").filter(wnm_pred)
-                    )
-                else:
-                    inserted = inserted.filter(wnm_pred)
-            # identity columns: matched rows inherit their value from
-            # the live candidate rows, fresh rows get watermark + rank
-            inserted, new_identity = self._assign_identity(inserted, m, keys, live)
-            # generated columns: compute the ones the source omits,
-            # refuse sources that contradict one (before alignment, so
-            # a computed column exists for the schema projection)
-            inserted = self._apply_generated(inserted, m)
-            ins, committed_schema = self._align_insert(
-                self._schema_of(m),
-                source,
-                inserted,
-                schema_evolution,
-                m.get("retired_cols") or (),
-                sorted(_phys_conflicts(m)),
-            )
-            new_dvs = None
-            killed = None
-            nmbs_killed = None
-            if live is not None:
-                if matched_pairs is not None:
-                    # KEY-level, like the COW path and the unconditioned
-                    # merge: every live row of a matched-true KEY is
-                    # replaced by the one source row (killing only the
-                    # cond-true row would diverge from COW on a target
-                    # holding duplicate keys); matched-false keys stay
-                    # fully alive
-                    killed = live.join(matched_true_keys, keys, "left_semi")
-                else:
-                    killed = live.join(src_keys, keys, "left_semi")
-                hits = killed.select(
-                    F.col("__file").alias("file"), F.col("__pos").alias("pos")
-                )
-                if nmbs_pred is not None:
-                    nmbs_killed = live.filter(nmbs_pred).join(
-                        src_keys, keys, "left_anti"
-                    )
-                    hits = hits.unionByName(
-                        nmbs_killed.select(
-                            F.col("__file").alias("file"), F.col("__pos").alias("pos")
-                        )
-                    )
-                new_dvs = self._build_dvs(m, candidates, hits)
-            appended: list[str] = []
-            ins_empty = ins.isEmpty()
-            if ins_empty and new_dvs is None:
-                return base  # no-op merge
-            if not ins_empty:
-                self._check_constraints(ins, m)
-                # clustered like the COW insert path so future merges/
-                # scans can prune the appended files; zero-row parts of
-                # a small source are dropped by _write_files
-                appended = self._write_files_mapped(ins, m, cluster_by=cluster_by)
-            # commit-time CDF (mirrors the COW path): append-only
-            # commits reference their added files (mode "data", no
-            # extra write); anything DV-killing preimages writes
-            # explicit change files
-            if new_dvs is None:
-                cdf_rec: dict | None = {"mode": "data"}
-            elif not m.get("cdf_enabled", True):
-                cdf_rec = None  # property off: commit derive-mode, no write
-            else:
-                ins_live = None if ins_empty else ins
-                if when_matched == "update":
-                    mk = killed.select(*keys).distinct()
-                    parts = [
-                        (killed, "update_preimage"),
-                        (
-                            None
-                            if ins_live is None
-                            else ins_live.join(mk, keys, "left_semi"),
-                            "update_postimage",
-                        ),
-                        (
-                            None
-                            if ins_live is None
-                            else ins_live.join(mk, keys, "left_anti"),
-                            "insert",
-                        ),
-                        (nmbs_killed, "delete"),
-                    ]
-                else:
-                    parts = [
-                        (killed, "delete"),
-                        (nmbs_killed, "delete"),
-                        (ins_live, "insert"),
-                    ]
-                cdf_names = self._write_cdf_files(
-                    parts, committed_schema, n_files=max(1, len(candidates))
-                )
-                cdf_rec = (
-                    {"mode": "files", "files": cdf_names}
-                    if cdf_names
-                    else {"mode": "none"}
-                )
-            stat_cols = list(dict.fromkeys((cluster_by or []) + keys))
-            appended_stats = self._collect_stats_mapped(appended, stat_cols, m)
-            new_stats = dict(self._stats_of(m))
-            new_stats.update(appended_stats)
-            m_dvs = m.get("dvs") or {}
-            dvs_map = (
-                new_dvs
-                if new_dvs is not None
-                else {f: list(v) for f, v in m_dvs.items()}
-            )
-            op = (
-                f"merge:{when_matched}"
-                + ("+syncdel" if not_matched_by_source == "delete" else "")
-                + ":mor"
-            )
-            try:
-                self._try_commit(
-                    base,
-                    list(m["files"]) + appended,
-                    op,
-                    cluster_by,
-                    txn_app,
-                    txn_version,
-                    schema_json=committed_schema,
-                    stats=new_stats,
-                    dvs=dvs_map,
-                    identity=new_identity,
-                    cdf=cdf_rec,
-                )
-                return base + 1
-            except CommitConflict:
-                # logical conflict check (see the COW path): MOR never
-                # drops files, so the rebase carries the head's file
-                # set plus this merge's appended postimages, and layers
-                # this merge's NEW DV entries over the head's map
-                rb = self._rebase_merge_commit(
-                    base,
-                    candidates,
-                    src_keys,
-                    keys,
-                    nmbs_on=not_matched_by_source == "delete",
-                    txn_app=txn_app,
-                    txn_version=txn_version,
-                    op=op,
-                    cluster_by=cluster_by,
-                    committed_schema=committed_schema,
-                    new_identity=new_identity,
-                    cdf_rec=cdf_rec,
-                    new_files=appended,
-                    new_file_stats=appended_stats,
-                    dv_delta={
-                        f: [d for d in v if d not in (m_dvs.get(f) or [])]
-                        for f, v in (new_dvs or {}).items()
-                    },
-                )
-                if rb is not None:
-                    return rb
-                # orphaned DV/data files from the failed attempt are
-                # cleaned by vacuum(); re-read and re-apply
-                continue
-        raise CommitConflict(
-            f"merge_into(mor) on {self.root} gave up after {max_retries} conflicts"
-        )
 
     def restore(self, version: int, max_retries: int = 5) -> int:
         """RESTORE: commit a NEW version whose state replays ``version``

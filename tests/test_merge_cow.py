@@ -1,12 +1,13 @@
-"""Copy-on-write ``merge_into``: its Spark-job budget, and the data and
-change rows of every clause against a pandas model.
+"""``merge_into`` under both write strategies: its Spark-job budget, and
+the data and change rows of every clause against a pandas model.
 
-The COW merge computes its source once (persisted for the call) and its
+The merge computes its source once (persisted for the call) and its
 match set once per attempt, reads its base schema from the manifest,
-and launches no emptiness probes. The budget tests pin the job counts
-that follow from that; the clause matrix pins that the rework left the
-committed snapshot and the commit's change rows exactly as the merge
-semantics define them.
+and launches no emptiness probes; copy-on-write and merge-on-read share
+all of it and differ only in how the removed rows leave the table. The
+budget tests pin the job counts that follow from that; the clause
+matrix pins, for each strategy, the committed snapshot and the commit's
+change rows exactly as the merge semantics define them.
 """
 
 from __future__ import annotations
@@ -165,6 +166,22 @@ class TestMergeJobBudget:
         assert got[2] == (1, 7) and 4 not in got and len(got) == 39
         assert len(jobs) <= 37, jobs
 
+    @pytest.mark.parametrize(
+        "case, budget", [("update", 15), ("matched_condition", 19), ("sync_delete_condition", 22)]
+    )
+    def test_mor_merge_job_count(self, spark, tmp_path, case, budget):
+        """A merge-on-read merge of the clause matrix: 21 / 41 / 31 jobs
+        for ``update`` / ``matched_condition`` / ``sync_delete_condition``
+        when MOR carried its own copy of the clause semantics (a distinct
+        source-key frame, two eager key checkpoints, an emptiness probe),
+        15 / 19 / 22 since it shares the COW match set and insert frame
+        (COW: 13 / 16 / 19)."""
+        t, df = _clause_case(spark, str(tmp_path / case), case)
+        kw = CASES[case][3]
+        _, jobs = _jobs(spark, lambda: t.merge_into(df, ["k"], strategy="mor", **kw))
+        assert t._read_manifest(t.version())["op"].endswith(":mor")
+        assert len(jobs) <= budget, jobs
+
 
 # ── clause matrix ────────────────────────────────────────────────────────
 
@@ -295,20 +312,35 @@ def _rows(df: pd.DataFrame, cols) -> Counter:
     return Counter(tuple(None if pd.isna(v) else v for v in r) for r in df[cols].itertuples(index=False))
 
 
-@pytest.mark.parametrize("case", sorted(CASES))
-def test_clause_matrix_snapshot_and_change_rows(spark, tmp_path, case):
-    extra, setup, src_rows, kw, fns = CASES[case]
+def _clause_case(spark, root, case):
+    """The clause-matrix target table of ``case`` and its source frame."""
+    extra, setup, src_rows, _, _ = CASES[case]
     base = [{**r, **{c: f(r) for c, f in extra.items()}} for r in BASE]
-    t = VersionedTable(spark, str(tmp_path / case))
+    t = VersionedTable(spark, root)
     t.create(spark.createDataFrame([Row(**r) for r in base]), n_files=3, cluster_by=["k"])
     if setup is not None:
         setup(t)
-    tgt = t.snapshot().toPandas().astype(object)
     label = "label" if case == "renamed" else "s"
     src_cols = ["k", "v", label] + (["x"] if case == "schema_evolution" else [])
-    src = pd.DataFrame(src_rows, columns=src_cols, dtype=object)
+    return t, spark.createDataFrame([Row(**dict(zip(src_cols, r))) for r in src_rows])
+
+
+# the COW cases keep their bare ids; MOR ones read e.g. ``update-mor``
+@pytest.mark.parametrize(
+    "case, strategy",
+    [
+        pytest.param(c, s, id=c if s == "cow" else f"{c}-{s}")
+        for s in ("cow", "mor")
+        for c in sorted(CASES)
+    ],
+)
+def test_clause_matrix_snapshot_and_change_rows(spark, tmp_path, case, strategy):
+    _, _, src_rows, kw, fns = CASES[case]
+    t, df = _clause_case(spark, str(tmp_path / case), case)
+    tgt = t.snapshot().toPandas().astype(object)
+    src = pd.DataFrame(src_rows, columns=df.columns, dtype=object)
     before = t.version()
-    t.merge_into(spark.createDataFrame([Row(**dict(zip(src_cols, r))) for r in src_rows]), ["k"], **kw)
+    t.merge_into(df, ["k"], strategy=strategy, **kw)
     assert t.version() == before + 1
     want_snap, want_changes = _model(tgt, src, kw, fns, case)
 
