@@ -52,9 +52,10 @@ def _cmd_run(args: argparse.Namespace) -> int:
         available_now=not args.follow,
     )
     q.awaitTermination()
+    from iotdatapipeline_spark.sources.versioned import VersionedTable
     from iotdatapipeline_spark.streaming.sinks import read_history
 
-    records = spark.read.parquet(os.path.join(out, "records"))
+    records = VersionedTable(spark, os.path.join(out, "records")).snapshot()
     history = read_history(spark, os.path.join(out, "history"))
     print(f"records: {records.count()} rows -> {out}/records")
     print(f"history: {history.count()} rows -> {out}/history")

@@ -1885,6 +1885,7 @@ def fanout_sinks_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate keys in the record table hash-mismatches. Invariants are
     deliberately split-independent so the oracle does not depend on
     which micro-batch a row landed in."""
+    from iotdatapipeline_spark.sources.versioned import VersionedTable
     from iotdatapipeline_spark.streaming.sinks import (
         fanout_foreach_batch,
         read_history,
@@ -1923,7 +1924,8 @@ def fanout_sinks_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("history").alias("sink"), "n_rows", "v_total")
     )
     recs = (
-        spark.read.parquet(up)
+        VersionedTable(spark, up)
+        .snapshot()
         .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
         .select(
             F.lit("records").alias("sink"),

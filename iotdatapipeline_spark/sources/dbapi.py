@@ -280,8 +280,9 @@ def dbapi_upsert_foreach_batch(
     **kwargs,
 ):
     """Streaming K1/K2 executor against a relational target: the
-    ``foreachBatch`` twin of ``streaming.sinks.upsert_foreach_batch``,
-    with the database doing the merge instead of a parquet rewrite.
+    ``foreachBatch`` twin of
+    ``streaming.sinks.versioned_upsert_foreach_batch``, with the
+    database doing the merge instead of a VersionedTable MERGE.
     Within a batch, last-write-wins per key by ``order_col``
     (deterministic tie-break — see ``latest_per_key``); across batch
     RETRIES the ON CONFLICT upsert is idempotent, so exactly-once
@@ -377,9 +378,10 @@ def _dbapi_writer_classes():
         idempotent upsert — a replayed micro-batch (sink write
         committed, offset commit lost) re-applies the same key-unique
         rows and converges, the same argument as
-        dbapi_upsert_foreach_batch and the K1 parquet sinks. commit /
-        abort receive the batchId; there is nothing transactional to
-        finalize per batch, by design."""
+        dbapi_upsert_foreach_batch; the K1 VersionedTable sink,
+        versioned_upsert_foreach_batch, skips the replay by its txn
+        stamp instead. commit / abort receive the batchId; there is
+        nothing transactional to finalize per batch, by design."""
 
         def commit(self, messages, batchId):
             pass

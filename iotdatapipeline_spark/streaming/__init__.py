@@ -6,8 +6,6 @@ from iotdatapipeline_spark.streaming.sinks import (
     append_foreach_batch,
     fanout_foreach_batch,
     latest_per_key,
-    merge_upsert,
-    upsert_foreach_batch,
 )
 from iotdatapipeline_spark.streaming.source import (
     drop_oldest_schedule,
@@ -24,8 +22,6 @@ __all__ = [
     "append_foreach_batch",
     "fanout_foreach_batch",
     "latest_per_key",
-    "merge_upsert",
-    "upsert_foreach_batch",
     "drop_oldest_schedule",
     "readings_stream",
     "stage_bounded_replay",

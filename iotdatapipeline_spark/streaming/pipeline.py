@@ -39,7 +39,7 @@ def run_pipeline(
     emit_mode: str = "reference",
     timeout_ms: int | None = None,
     timeout_mode: str = "processing",
-    versioned_records: bool = False,
+    versioned_records: bool = True,
     available_now: bool = True,
     watermark_delay: str = "0 seconds",
 ) -> StreamingQuery:
@@ -47,10 +47,13 @@ def run_pipeline(
     and stops (test mode); otherwise it runs with a 1 s trigger
     mirroring the reference's poll cadence (T1).
 
+    The K1 records at ``records_path`` are always a VersionedTable: one
+    txn-exactly-once MERGE per micro-batch; read them with
+    ``VersionedTable(spark, records_path).snapshot()``.
+    ``versioned_records=False`` raises ``ValueError``.
+
     Production configuration: ``timeout_mode="event"`` (deterministic
-    replayable silence detection; terminates under availableNow) with
-    ``versioned_records=True`` (K1 through the transactional MERGE
-    target, txn-exactly-once per micro-batch).
+    replayable silence detection; terminates under availableNow).
 
     ``watermark_delay`` (event mode only) is how long an out-of-order
     reading may lag the max seen event time before the engine drops it
@@ -61,6 +64,8 @@ def run_pipeline(
     seconds"``) — the trade-off is limpieza timers firing that much
     later. With a non-zero delay the stateful op's late-batch handling
     (lifetime max_ts_ms) engages for rows inside the allowance."""
+    if not versioned_records:
+        raise ValueError("the K1 records table is always a VersionedTable")
     stream = readings_stream(spark, replay_dir)
     if config is not None:
         stream = enrich_with_config(stream, config)
@@ -89,7 +94,6 @@ def run_pipeline(
                 updates_keys=["station", "part", "plan_date", "shift_id"],
                 history_path=history_path,
                 limpieza_path=limpieza_path,
-                versioned_records=versioned_records,
                 # the checkpoint is the query's durable identity: same
                 # checkpoint ⇒ same batch-id sequence ⇒ same txn app;
                 # a fresh checkpoint automatically gets a fresh app id

@@ -3,20 +3,16 @@
 The reference upserts row-at-a-time over pyodbc (Prensas.py:224, 334,
 392). Here each micro-batch computes its effect functionally
 (insert-set / update-set / reject-set — oracle-testable, SURVEY.md §7
-step 5) and a ``foreachBatch`` executor applies it. On plain parquet
-the upsert is anti-join + rewrite, swapped in by renaming the old table
-aside (crash-safe, not atomic: see :func:`_swap_overwrite`); on a
-transactional table format this maps 1:1 to ``MERGE WHEN MATCHED
-UPDATE / WHEN NOT MATCHED INSERT`` — the executor is the only piece
-that changes at production scale. The VersionedTable executors share
-one write protocol: :func:`_first_commit`, :func:`_applied`,
+step 5) and a ``foreachBatch`` executor applies it. The K1 record
+upsert is one txn-stamped ``MERGE WHEN MATCHED UPDATE / WHEN NOT
+MATCHED INSERT`` per micro-batch into a VersionedTable
+(:func:`versioned_upsert_foreach_batch`). The VersionedTable executors
+share one write protocol: :func:`_first_commit`, :func:`_applied`,
 :func:`_maintain_groups` and :func:`_delta_join`.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 import uuid
 from collections.abc import Callable, Sequence
 from functools import reduce
@@ -47,44 +43,6 @@ def latest_per_key(
         ).alias("__s")
     )
     return agg.select(*keys, *[F.col(f"__s.{c}").alias(c) for c in others])
-
-
-def merge_upsert(existing: DataFrame, updates: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """K1/K2 effect: rows keyed in ``updates`` replace matching rows in
-    ``existing``; unmatched update rows insert. Pure computation."""
-    kept = existing.join(updates.select(*keys).distinct(), list(keys), "left_anti")
-    return kept.unionByName(updates.select(*existing.columns))
-
-
-def read_or_empty(spark: SparkSession, path: str, schema_of: DataFrame) -> DataFrame:
-    # settle a _swap_overwrite that crashed after renaming the old table
-    # aside: a lone path__old is the last complete table, so it takes
-    # its name back; next to path it is the replaced one, so it goes
-    old = f"{path}__old"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema_of.schema)
-
-
-def _swap_overwrite(df: DataFrame, path: str) -> None:
-    """Replace the table at ``path`` with ``df``: write a temp dir, rename
-    the old table aside, rename the temp dir in, drop the old table.
-    Some complete table is always on disk (removing the old table first
-    would let a crash before the rename lose every record), but a
-    reader between the renames finds none: crash-safe, not atomic."""
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    old = f"{path}__old"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
 
 
 def _applied(t: VersionedTable, app: str, txn_version: int) -> bool:
@@ -121,24 +79,6 @@ def _first_commit(
         return False  # another writer created the table first — merge
 
 
-def upsert_foreach_batch(path: str, keys: Sequence[str]):
-    """K1/K2 executor: parquet upsert per micro-batch; within a batch
-    last-write-wins by ``order_col`` (the state op emits per-key
-    ordered rows, so the max-ts row is the final record state)."""
-
-    def apply(
-        batch_df: DataFrame, batch_id: int, order_col: str | Sequence[str] = "ts"
-    ) -> None:
-        if not batch_df.columns:
-            return
-        spark = batch_df.sparkSession
-        latest = latest_per_key(batch_df, keys, order_col)
-        existing = read_or_empty(spark, path, batch_df)
-        _swap_overwrite(merge_upsert(existing, latest, keys), path)
-
-    return apply
-
-
 def versioned_upsert_foreach_batch(
     root: str,
     keys: Sequence[str],
@@ -154,9 +94,7 @@ def versioned_upsert_foreach_batch(
     (sources/versioned.py): each micro-batch becomes one committed
     MERGE — atomic, and concurrent writers (another stream, a batch
     backfill) are serialized by optimistic concurrency instead of
-    clobbering each other the way whole-table overwrite would. This is
-    the executor a production deployment keeps; the plain-parquet
-    ``upsert_foreach_batch`` is the zero-infrastructure fallback.
+    clobbering each other the way whole-table overwrite would.
 
     ``strategy``: ``"cow"`` (default) rewrites only the files holding
     matched keys; ``"mor"`` commits deletion-vector preimage kills +
@@ -289,7 +227,6 @@ def fanout_foreach_batch(
     updates_keys: Sequence[str],
     history_path: str,
     limpieza_path: str | None = None,
-    versioned_records: bool = False,
     txn_app: str | None = None,
 ):
     """The reference's per-batch effect fan-out (Prensas.py:794-818):
@@ -297,14 +234,10 @@ def fanout_foreach_batch(
     per (station, part, plan_date, shift), limpieza rows (K5) routed
     to their own sink. One pass over a cached batch.
 
-    ``versioned_records=True`` sends the K1 upsert through
-    :func:`versioned_upsert_foreach_batch` (``updates_path`` becomes a
-    VersionedTable root): copy-on-write rewrites, atomic commits, and
-    txn-exactly-once under batch replay — the production
-    configuration. The default plain-parquet overwrite
-    (:func:`upsert_foreach_batch`) remains the zero-infrastructure
-    fallback. Either way a key's last row wins by ``ts``, ties broken
-    by ``counter``.
+    The K1 upsert runs through :func:`versioned_upsert_foreach_batch`
+    (``updates_path`` is a VersionedTable root): copy-on-write
+    rewrites, atomic commits, and txn-exactly-once under batch replay.
+    A key's last row wins by ``ts``, ties broken by ``counter``.
 
     ``txn_app`` follows the same contract as
     :func:`versioned_upsert_foreach_batch`: distinct stable id per
@@ -313,10 +246,7 @@ def fanout_foreach_batch(
     process only)."""
 
     app = txn_app if txn_app is not None else f"pipeline-{uuid.uuid4().hex[:12]}"
-    if versioned_records:
-        upsert = versioned_upsert_foreach_batch(updates_path, updates_keys, txn_app=app)
-    else:
-        upsert = upsert_foreach_batch(updates_path, updates_keys)
+    upsert = versioned_upsert_foreach_batch(updates_path, updates_keys, txn_app=app)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()

@@ -2,10 +2,35 @@
 
 from __future__ import annotations
 
+import re
+
 from iotdatapipeline_spark.__main__ import main
 
 
 class TestCli:
+    def test_run_subcommand(self, spark, sf_small, tmp_path, capsys):
+        """``run`` drains the replay into the VersionedTable records and
+        prints the snapshot's count; the snapshot is the per-key latest
+        update row of the history, written as one create and then only
+        merges."""
+        from pyspark.sql import functions as F
+
+        from iotdatapipeline_spark.sources.versioned import VersionedTable
+        from iotdatapipeline_spark.streaming.sinks import latest_per_key, read_history
+
+        out = str(tmp_path / "out")
+        assert main(["run", "--sf-dir", sf_small, "--out", out, "--chunks", "4"]) == 0
+        printed = re.search(r"^records: (\d+) rows", capsys.readouterr().out, re.M)
+        table = VersionedTable(spark, f"{out}/records")
+        snap = table.snapshot()
+        assert printed and int(printed[1]) == snap.count() > 0
+        updates = read_history(spark, f"{out}/history").filter(F.col("row_kind") == "update")
+        keys = ["station", "part", "plan_date", "shift_id"]
+        want = latest_per_key(updates, keys, ("ts", "counter")).select(*snap.columns)
+        assert sorted(map(tuple, snap.collect())) == sorted(map(tuple, want.collect()))
+        ops = [m["op"] for m in table.history()]
+        assert ops[0] == "create" and set(ops[1:]) <= {"merge:update"}
+
     def test_query_subcommand_prints_table(self, spark, sf_small, capsys):
         rc = main(["query", "latest_snapshot", "--sf-dir", sf_small, "--rows", "5"])
         assert rc == 0

@@ -141,7 +141,6 @@ class TestMergeJobBudget:
             updates_keys=["station", "part", "plan_date", "shift_id"],
             history_path=str(tmp_path / "history"),
             limpieza_path=str(tmp_path / "limpieza"),
-            versioned_records=True,
             txn_app="fanout",
         )
         sink(batch(0), 0)

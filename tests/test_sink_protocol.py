@@ -4,22 +4,27 @@ Every sink bootstraps a missing target through one first-commit helper
 and reads its txn cursor through ``VersionedTable.txn``. The matrix
 below pins both across the six sink factories: a replayed batch commits
 nothing, and a sink that loses the create race to another writer merges
-its batch instead of failing. Also here: the plain-parquet overwrite's
-crash recovery, and a guard that the txn map format stays inside
+its batch instead of failing. Also here: the K1 fan-out's crash window
+between its history append and its record merge, the fan-out gate
+query against its DuckDB oracle, the records table being always a
+VersionedTable, and a guard that the txn map format stays inside
 ``sources/versioned.py``.
 """
 
 from __future__ import annotations
 
-import os
+import datetime as dt
 import pathlib
 
+import duckdb
 import pytest
 from pyspark.sql import Row
 
 import iotdatapipeline_spark
+from iotdatapipeline_spark.plans import ORACLE, QUERIES
 from iotdatapipeline_spark.sources.versioned import VersionedTable
-from iotdatapipeline_spark.streaming import sinks
+from iotdatapipeline_spark.streaming import run_pipeline, sinks
+from iotdatapipeline_spark.streaming.stateful import OUTPUT_SCHEMA
 
 _CDF = "k int, v string, _change_type string, _commit_version bigint"
 _MM = "g bigint, x bigint, _change_type string, _commit_version bigint"
@@ -147,44 +152,92 @@ def test_lost_create_race_merges(spark, tmp_path, monkeypatch, case):
     assert t.txn("ours")[0] == 0 and t.txn("other") == (0, 1)
 
 
-@pytest.mark.parametrize("crash", ["second_rename", "cleanup"])
-def test_plain_overwrite_crash_keeps_records(spark, tmp_path, monkeypatch, crash):
-    """The plain-parquet K1 upsert swaps its table in by renaming the old
-    one aside. A crash at either later step loses no record: the replayed
-    batch ends at the merged model."""
-    path = str(tmp_path / "records")
-    sink = sinks.upsert_foreach_batch(path, ["k"])
-    ddl = "k int, ts int, v string"
-    sink(spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], ddl), 0)
-    batch1 = [(2, 2, "c"), (3, 1, "d")]
-    old = f"{path}__old"
-    if crash == "second_rename":
-        rename = os.rename
+def _fanout_batch(spark, i):
+    """Fan-out batch ``i``: update rows for stations i..i+2 (so batch 1
+    updates two records of batch 0 and inserts one) plus a limpieza row."""
+    day, t0 = dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 9, 0)
+    rows = [
+        (s, "p", t0 + dt.timedelta(seconds=i), 10 * i + s, 0, 1, i, False, 1, day, "update")
+        for s in range(i, i + 3)
+    ]
+    rows.append((7, "p", t0, 0, 0, 0, 0, False, 1, day, "limpieza"))
+    return spark.createDataFrame(rows, OUTPUT_SCHEMA)
 
-        def failing(src, dst):
-            if dst == path:
-                raise OSError("injected crash before the new table takes its name")
-            rename(src, dst)
 
-        monkeypatch.setattr(sinks.os, "rename", failing)
-    else:
-        rmtree = sinks.shutil.rmtree
+def test_fanout_crash_before_records_merge_replays_once(spark, tmp_path, monkeypatch):
+    """A crash after batch 1's history append and before its K1 merge.
+    Spark replays the batch: the history partition is overwritten, not
+    appended again, the records merge lands once, and a second replay
+    commits nothing."""
+    keys = ["station", "part", "plan_date", "shift_id"]
+    records, history = str(tmp_path / "records"), str(tmp_path / "history")
+    sink = sinks.fanout_foreach_batch(
+        updates_path=records,
+        updates_keys=keys,
+        history_path=history,
+        limpieza_path=str(tmp_path / "limpieza"),
+        txn_app="fanout",
+    )
+    sink(_fanout_batch(spark, 0), 0)
+    merge_into = VersionedTable.merge_into
 
-        def failing(p, *a, **kw):
-            if p == old:
-                raise OSError("injected crash before the old table is removed")
-            rmtree(p, *a, **kw)
+    def crashing(self, *a, **kw):
+        if kw.get("txn_version") == 1:
+            raise OSError("injected crash before the K1 merge")
+        return merge_into(self, *a, **kw)
 
-        monkeypatch.setattr(sinks.shutil, "rmtree", failing)
+    monkeypatch.setattr(VersionedTable, "merge_into", crashing)
     with pytest.raises(OSError, match="injected crash"):
-        sink(spark.createDataFrame(batch1, ddl), 1)
+        sink(_fanout_batch(spark, 1), 1)
     monkeypatch.undo()
-    assert os.path.exists(old)
-    assert os.path.exists(path) == (crash == "cleanup")
-    sink(spark.createDataFrame(batch1, ddl), 1)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "c", 3: "d"}
-    assert not os.path.exists(old)
+    t = VersionedTable(spark, records)
+    assert sinks.read_history(spark, history).count() == 6  # batch 1 landed
+    assert t.txn("fanout") == (0, 1)  # its merge did not
+
+    sink(_fanout_batch(spark, 1), 1)
+    v = t.version()
+    assert t.txn("fanout") == (1, v)
+    sink(_fanout_batch(spark, 1), 1)
+    assert t.version() == v
+
+    updates = [
+        r for i in (0, 1) for r in _fanout_batch(spark, i).collect() if r["row_kind"] == "update"
+    ]
+    hist = sinks.read_history(spark, history)
+    assert sorted(map(tuple, hist.collect())) == sorted(map(tuple, updates))
+    snap = t.snapshot()
+    want = sinks.latest_per_key(hist, keys, ("ts", "counter")).select(*snap.columns)
+    assert sorted(map(tuple, snap.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_fanout_sinks_readback_matches_oracle(spark, sf_small):
+    """The fan-out gate query equals its DuckDB oracle: same columns,
+    same rows in any order."""
+    name = "fanout_sinks_readback"
+    got = QUERIES[name](spark, sf_small)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'")
+    want = con.sql(ORACLE[name])
+
+    def canon(cols, rows):
+        return sorted(tuple(sorted((c, repr(v)) for c, v in zip(cols, r))) for r in rows)
+
+    assert sorted(got.columns) == sorted(want.columns)
+    assert canon(got.columns, got.collect()) == canon(want.columns, want.fetchall())
+
+
+def test_run_pipeline_rejects_plain_records():
+    """The records table is always a VersionedTable: asking for anything
+    else fails before any Spark work."""
+    with pytest.raises(ValueError, match="VersionedTable"):
+        run_pipeline(
+            None,
+            "replay",
+            checkpoint_dir="ckpt",
+            records_path="records",
+            history_path="history",
+            versioned_records=False,
+        )
 
 
 def test_txn_map_format_stays_in_versioned():

@@ -19,7 +19,6 @@ from iotdatapipeline_spark.streaming import (
     counter_state_machine,
     latest_per_key,
     make_state_fn,
-    merge_upsert,
     readings_stream,
     run_pipeline,
     stage_replay_chunks,
@@ -257,7 +256,9 @@ class TestEndToEndStreaming:
         assert expected.count() > 0
 
         # K1 upsert result: one record per (station, part, plan_date, shift)
-        records = spark.read.parquet(str(tmp_path / "records"))
+        from iotdatapipeline_spark.sources.versioned import VersionedTable
+
+        records = VersionedTable(spark, str(tmp_path / "records")).snapshot()
         n_rec = records.count()
         n_keys = records.select("station", "part", "plan_date", "shift_id").distinct().count()
         assert n_rec == n_keys
@@ -293,7 +294,6 @@ class TestEndToEndStreaming:
             emit_mode="row",
             timeout_ms=3_600_000,
             timeout_mode="event",
-            versioned_records=True,
             available_now=True,
         )
         q.awaitTermination(300)
@@ -574,12 +574,6 @@ class TestSinks:
         got = read_history(spark, path)
         assert got.count() == 3
         assert "__batch_id" not in got.columns
-
-    def test_merge_upsert(self, spark):
-        existing = spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "id int, k string, v int")
-        updates = spark.createDataFrame([(2, "b", 99), (3, "c", 30)], "id int, k string, v int")
-        out = merge_upsert(existing, updates, ["id"]).orderBy("id").collect()
-        assert [(r["id"], r["v"]) for r in out] == [(1, 10), (2, 99), (3, 30)]
 
     def test_latest_per_key(self, spark):
         df = spark.createDataFrame(
