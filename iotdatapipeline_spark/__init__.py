@@ -18,7 +18,12 @@ Layering (SURVEY.md §7):
   plans/      — the named query registry wired to the driver contract
 """
 
+from iotdatapipeline_spark import zipimport_cache
 from iotdatapipeline_spark.session import get_spark
+
+# Python workers import the package when they unpickle one of its
+# functions; from then on their tasks skip re-reading pyspark.zip
+zipimport_cache.install()
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

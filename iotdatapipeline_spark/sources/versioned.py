@@ -2117,7 +2117,7 @@ class VersionedTable:
                     if added_probe(head_m, added):
                         return None
                 else:
-                    maybe = self._candidates_by_key_bounds(
+                    maybe, _ = self._candidates_by_key_bounds(
                         {**head_m, "files": added}, src_keys, keys
                     )
                     if maybe:
@@ -2296,7 +2296,12 @@ class VersionedTable:
                 # touched" probe scans the whole table — the step that
                 # turns a key-local MERGE into a full-table read at 100 TB.
                 stats = self._stats_of(m)
-                candidates = self._candidates_by_key_bounds(m, src_keys, keys)
+                candidates, has_rows = self._candidates_by_key_bounds(m, src_keys, keys)
+                if has_rows is False and not_matched_by_source is None:
+                    # an empty source updates, deletes and inserts
+                    # nothing: done before any probe, write or commit
+                    # (NULL bounds would keep every file in the probe)
+                    return base
                 # WHEN NOT MATCHED BY SOURCE scope: files that might hold a
                 # delete-eligible row — the condition's range bounds prune
                 # exactly like scan(); no condition puts every file in scope
@@ -3434,8 +3439,8 @@ class VersionedTable:
                 seen = self._txn_in(m, txn_app)
                 if seen is not None and seen[0] >= int(txn_version):
                     return seen[1]  # already applied (batch replay)
-            candidates = self._candidates_by_key_bounds(m, src_keys, keys)
-            if not candidates:
+            candidates, has_rows = self._candidates_by_key_bounds(m, src_keys, keys)
+            if not candidates or has_rows is False:
                 return base  # no file can hold a matching key
             live = self._read_data(m, candidates, with_pos=True)
             doomed = live.join(src_keys, keys, "left_semi")
@@ -3465,11 +3470,17 @@ class VersionedTable:
 
     def _candidates_by_key_bounds(
         self, m: dict, src_keys: DataFrame, keys: Sequence[str]
-    ) -> list[str]:
+    ) -> tuple[list[str], bool | None]:
         """Files of manifest ``m`` whose stats ranges can intersect the
         source's key bounds — the stats pre-prune shared by the MERGE
         touched-file probe and keyed DV deletes: a file whose recorded
         [min, max] provably misses every source key is never read.
+        Also returns whether the source has rows, read off the same
+        bounds job (``None`` when no key has stats and no bounds job
+        runs), so callers skip an empty source without a probe of their
+        own. The flag is ``max(1)``, not ``count(*)``: like min and max
+        it ignores duplicates, so Catalyst still drops a ``distinct``
+        or group-by under the source (a count kept it, one more job).
 
         When a key column carries a Bloom index the survivors are
         refined per file: [min(src), max(src)] is ONE global range, so
@@ -3484,11 +3495,14 @@ class VersionedTable:
         stats = self._stats_of(m)
         candidates = list(m["files"])
         stat_keys = [k for k in keys if any(k in (stats.get(f) or {}) for f in candidates)]
+        has_rows = None
         if stat_keys:
             bounds_row = src_keys.agg(
+                F.max(F.lit(1)).alias("rows"),
                 *[F.min(k).alias(f"lo_{i}") for i, k in enumerate(stat_keys)],
                 *[F.max(k).alias(f"hi_{i}") for i, k in enumerate(stat_keys)],
             ).collect()[0]
+            has_rows = bounds_row["rows"] is not None
             candidates = [
                 f
                 for f in candidates
@@ -3522,7 +3536,7 @@ class VersionedTable:
                 if (entry := col_blooms.get(f)) is None
                 or any(_bloom_maybe_contains(entry, v) for v in vals)
             ]
-        return candidates
+        return candidates, has_rows
 
     def _build_dvs(self, m: dict, candidates: list[str], hits: DataFrame) -> dict | None:
         """Write ``hits`` (file, pos) as DV parquet and return the

@@ -17,7 +17,7 @@ import uuid
 from collections.abc import Callable, Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from iotdatapipeline_spark.sources.versioned import CommitConflict, VersionedTable
@@ -58,12 +58,15 @@ def _first_commit(
     cluster_by: Sequence[str],
     app: str,
     txn_version: int,
+    cdf: bool = True,
 ) -> bool:
     """First-commit bootstrap of a sink's target: while ``t`` does not
     exist, commit ``seed()`` (built only then) as version 1 stamped
     (``app``, ``txn_version``), so a replay of the creating batch is
     recognized by later idempotence checks. An empty seed commits
     nothing: a zero-file version would burn the app's txn slot.
+    ``cdf`` is the created table's change-feed property
+    (:meth:`~.versioned.VersionedTable.create`).
     ``True`` when the batch is settled here; ``False`` when the caller
     must apply it to the existing table — including one another writer
     created after the version check."""
@@ -73,7 +76,9 @@ def _first_commit(
     if frame.isEmpty():
         return True
     try:
-        t.create(frame, cluster_by=list(cluster_by), txn_app=app, txn_version=txn_version)
+        t.create(
+            frame, cluster_by=list(cluster_by), txn_app=app, txn_version=txn_version, cdf=cdf
+        )
         return True
     except (CommitConflict, ValueError):
         return False  # another writer created the table first — merge
@@ -147,7 +152,19 @@ def versioned_upsert_foreach_batch(
     on top of the txn map's whole-batch replay dedup, it stops a LATE
     batch (distinct batch_id, older data — a backfill racing the live
     stream, or two writers with different lags) from regressing newer
-    rows. Within-batch last-write-wins still runs first."""
+    rows. Within-batch last-write-wins still runs first.
+
+    The sink creates its target with the change feed OFF
+    (``create(cdf=False)``): a merge that rewrites rows then writes no
+    change files, and ``changes()`` on the table falls back to its
+    snapshot diff, which yields the same rows. A consumer that tails
+    the table turns the feed on with
+    :meth:`~.versioned.VersionedTable.set_cdf` ``(True)``; a target
+    that already exists keeps its own setting.
+
+    An empty micro-batch commits nothing and leaves the app's txn
+    unrecorded: ``merge_into`` sees the empty source in its key-bounds
+    job and returns before any probe, write or commit."""
     app = txn_app if txn_app is not None else f"stream-{uuid.uuid4().hex[:12]}"
 
     def apply(
@@ -161,10 +178,8 @@ def versioned_upsert_foreach_batch(
         # between sink write and offset commit) must not apply twice —
         # including a replay of the CREATING batch, whose txn the
         # create commit records for merge_into's idempotence check.
-        if _first_commit(table, lambda: latest, keys, app, batch_id):
+        if _first_commit(table, lambda: latest, keys, app, batch_id, cdf=False):
             return
-        if latest.isEmpty():
-            return  # an empty micro-batch must not burn the app's txn slot
         table.merge_into(
             latest,
             keys,
@@ -232,7 +247,9 @@ def fanout_foreach_batch(
     """The reference's per-batch effect fan-out (Prensas.py:794-818):
     history append (K3) for every update row, record upsert (K1) keyed
     per (station, part, plan_date, shift), limpieza rows (K5) routed
-    to their own sink. One pass over a cached batch.
+    to their own sink. One pass over a cached batch: the history
+    append also counts the limpieza rows (an observation ahead of its
+    filter), and the limpieza append runs only when there are any.
 
     The K1 upsert runs through :func:`versioned_upsert_foreach_batch`
     (``updates_path`` is a VersionedTable root): copy-on-write
@@ -251,13 +268,18 @@ def fanout_foreach_batch(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            updates = batch_df.filter(F.col("row_kind") == "update")
-            _idempotent_append(updates, batch_id, history_path)
-            upsert(updates, batch_id, order_col=("ts", "counter"))
-            if limpieza_path is not None:
-                limp = batch_df.filter(F.col("row_kind") == "limpieza").select("station", "part")
-                if limp.take(1):
-                    _idempotent_append(limp, batch_id, limpieza_path)
+            is_update = F.col("row_kind") == "update"
+            is_limp = F.col("row_kind") == "limpieza"
+            limp_seen = Observation()
+            _idempotent_append(
+                batch_df.observe(limp_seen, F.count_if(is_limp).alias("n")).filter(is_update),
+                batch_id,
+                history_path,
+            )
+            upsert(batch_df.filter(is_update), batch_id, order_col=("ts", "counter"))
+            if limpieza_path is not None and limp_seen.get["n"] > 0:
+                limp = batch_df.filter(is_limp).select("station", "part")
+                _idempotent_append(limp, batch_id, limpieza_path)
         finally:
             batch_df.unpersist()
 

@@ -115,12 +115,37 @@ class TestMergeJobBudget:
             (51, 5, 0, "insert"),
         ]
 
+    def test_empty_source_merge_probes_nothing(self, spark, tmp_path, monkeypatch):
+        """An empty source into a 4-file clustered table: the key-bounds
+        job sees no rows and the merge returns before it reads a data
+        file, writes or commits. 5 jobs when NULL bounds kept every file
+        in the match probe; the bounds job alone is 2-3 (the source's
+        cache, its shuffle and the result)."""
+        t = _clustered(spark, str(tmp_path / "t"), 400, 4)
+        t.record_txn("app", 1)
+        assert len(t._read_manifest(2)["files"]) == 4 and t.txn("app") == (1, 2)
+        empty = spark.createDataFrame([], "k long, v long, g long")
+        reads = []
+        read_data = VersionedTable._read_data
+
+        def counting_read(self, *a, **kw):
+            reads.append(a)
+            return read_data(self, *a, **kw)
+
+        monkeypatch.setattr(VersionedTable, "_read_data", counting_read)
+        v, jobs = _jobs(spark, lambda: t.merge_into(empty, ["k"], txn_app="app", txn_version=2))
+        assert v == 2 and t.version() == 2 and t.txn("app") == (1, 2)
+        assert reads == []
+        assert len(jobs) <= 3, jobs
+
     def test_fanout_versioned_batch_job_count(self, spark, tmp_path):
         """One ``stream_narrow``-shaped fan-out batch against an existing
         records table: history append, K1 versioned merge and limpieza
-        route: 20 jobs when the fan-out still ran its own copy of the K1
-        executor, the budget kept since it calls
-        ``versioned_upsert_foreach_batch``."""
+        route. 19 jobs while the K1 sink probed its source with
+        ``isEmpty()``, the limpieza route probed with ``take(1)`` and the
+        records table wrote change files; 13 since the merge's bounds job
+        sees an empty source, the history append counts the limpieza
+        rows and the table is created without a change feed."""
         import datetime as dt
 
         from iotdatapipeline_spark.streaming.sinks import fanout_foreach_batch
@@ -147,7 +172,7 @@ class TestMergeJobBudget:
         _, jobs = _jobs(spark, lambda: sink(batch(1), 1))
         t = VersionedTable(spark, str(tmp_path / "records"))
         assert t.version() == 2 and t.txn("fanout") == (1, 2)
-        assert len(jobs) <= 20, jobs
+        assert len(jobs) <= 13, jobs
 
     def test_view_refresh_update_and_delete_job_count(self, spark, tmp_path):
         """One SUM/COUNT ``MaterializedView.refresh`` over a source update

@@ -152,16 +152,70 @@ def test_lost_create_race_merges(spark, tmp_path, monkeypatch, case):
     assert t.txn("ours")[0] == 0 and t.txn("other") == (0, 1)
 
 
-def _fanout_batch(spark, i):
+def _fanout_batch(spark, i, limpieza=(7,)):
     """Fan-out batch ``i``: update rows for stations i..i+2 (so batch 1
-    updates two records of batch 0 and inserts one) plus a limpieza row."""
+    updates two records of batch 0 and inserts one) plus a limpieza row
+    per station in ``limpieza``."""
     day, t0 = dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 9, 0)
     rows = [
         (s, "p", t0 + dt.timedelta(seconds=i), 10 * i + s, 0, 1, i, False, 1, day, "update")
         for s in range(i, i + 3)
     ]
-    rows.append((7, "p", t0, 0, 0, 0, 0, False, 1, day, "limpieza"))
+    rows += [(s, "p", t0, 0, 0, 0, 0, False, 1, day, "limpieza") for s in limpieza]
     return spark.createDataFrame(rows, OUTPUT_SCHEMA)
+
+
+_KEYS = ["station", "part", "plan_date", "shift_id"]
+
+
+def _fanout_sink(tmp_path):
+    return sinks.fanout_foreach_batch(
+        updates_path=str(tmp_path / "records"),
+        updates_keys=_KEYS,
+        history_path=str(tmp_path / "history"),
+        limpieza_path=str(tmp_path / "limpieza"),
+        txn_app="fanout",
+    )
+
+
+def test_fanout_writes_limpieza_only_when_the_batch_has_some(spark, tmp_path):
+    """A batch without limpieza rows leaves no partition under the
+    limpieza path; a batch with some writes exactly those rows."""
+    sink, limpieza = _fanout_sink(tmp_path), tmp_path / "limpieza"
+    sink(_fanout_batch(spark, 0, limpieza=()), 0)
+    assert not (limpieza / "__batch_id=0").exists()
+    sink(_fanout_batch(spark, 1, limpieza=(7, 8)), 1)
+    assert not (limpieza / "__batch_id=0").exists()
+    got = sinks.read_history(spark, str(limpieza)).collect()
+    assert sorted(map(tuple, got)) == [(7, "p"), (8, "p")]
+    assert sinks.read_history(spark, str(tmp_path / "history")).count() == 6
+
+
+def test_fanout_records_table_has_no_change_feed(spark, tmp_path):
+    """The fan-out creates its records table with the change feed off:
+    its merges write no change files, and ``changes()`` over two merges
+    is the diff of the two snapshots."""
+    sink = _fanout_sink(tmp_path)
+    for i in range(3):
+        sink(_fanout_batch(spark, i), i)
+    t = VersionedTable(spark, str(tmp_path / "records"))
+    assert t.version() == 3 and t.describe()["cdf_enabled"] is False
+    assert [m["cdf"]["mode"] for m in t.history()[1:]] == ["derive", "derive"]
+
+    def image(v):
+        return {tuple(r[k] for k in _KEYS): tuple(r) for r in t.snapshot(v).collect()}
+
+    old, new = image(1), image(3)
+    want = sorted(
+        [(*new[k], "insert") for k in new.keys() - old.keys()]
+        + [(*old[k], "delete") for k in old.keys() - new.keys()]
+        + [(*new[k], "update_postimage") for k in new.keys() & old.keys() if new[k] != old[k]]
+    )
+    cols = [*t.snapshot(3).columns, "_change_type"]
+    feed = t.changes(1, 3, _KEYS)
+    assert sorted(feed.columns) == sorted(cols)
+    got = sorted(map(tuple, feed.select(*cols).collect()))
+    assert got == want and len(got) == 4  # 2 stations updated, 2 inserted
 
 
 def test_fanout_crash_before_records_merge_replays_once(spark, tmp_path, monkeypatch):
