@@ -81,6 +81,25 @@ _RETEST = [
     "events_versioned_ivm_agg_join",
     "events_versioned_mv_reseed",
     "stream_limpieza_timeout",
+    # every gate stream now drains into its memory sink through one
+    # helper (plans/_registry.py drain), with its checkpoint and replay
+    # under the per-process scratch root — fresh rows on every query
+    # whose drain code changed
+    "stream_counter_machine_rowmode",
+    "stream_counter_machine_reference",
+    "stream_limpieza_wallclock",
+    "stream_drop_oldest_backpressure",
+    "events_late_dedup",
+    "events_late_window",
+    "plc_stream_totals",
+    "events_stream_chained_agg",
+    "events_click_purchase_join",
+    "events_click_purchase_left_join",
+    "events_click_purchase_full_join",
+    "events_stream_static_enrich",
+    "events_stream_rolling_zscore",
+    "events_stream_alert_debounce",
+    "events_versioned_cdf_stream",
     # (r12 retest entries retired — every one got its fresh green
     # driver row in CORRECTNESS_r12 on the restructured code)
 ]

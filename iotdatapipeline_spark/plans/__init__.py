@@ -1,47 +1,25 @@
-"""Named query registry wired to the driver contract."""
+"""Named query registry behind ``__spark_entry__.queries`` and ``oracle_sql``.
 
-from iotdatapipeline_spark.plans.core import ORACLE as _CORE_ORACLE
-from iotdatapipeline_spark.plans.core import QUERIES as _CORE_QUERIES
+Every query module registers into the one registry in ``_registry``:
+each name is declared once, with its DuckDB oracle SQL when it has one.
+Importing the modules in a fixed order fixes the order of ``QUERIES``.
+A query's scratch dirs live under one per-process root that is removed
+when the interpreter exits, and every gate stream drains into its memory
+sink through the one ``drain`` helper.
+"""
 
-QUERIES = dict(_CORE_QUERIES)
-ORACLE = dict(_CORE_ORACLE)
-
-from iotdatapipeline_spark.plans.analytics import ORACLE as _AN_ORACLE
-from iotdatapipeline_spark.plans.analytics import QUERIES as _AN_QUERIES
-from iotdatapipeline_spark.plans.olap import ORACLE as _OL_ORACLE
-from iotdatapipeline_spark.plans.olap import QUERIES as _OL_QUERIES
-from iotdatapipeline_spark.plans.streams import ORACLE as _ST_ORACLE
-from iotdatapipeline_spark.plans.streams import QUERIES as _ST_QUERIES
-from iotdatapipeline_spark.plans.subqueries import ORACLE as _SQ_ORACLE
-from iotdatapipeline_spark.plans.subqueries import QUERIES as _SQ_QUERIES
-from iotdatapipeline_spark.plans.timeseries import ORACLE as _TS_ORACLE
-from iotdatapipeline_spark.plans.timeseries import QUERIES as _TS_QUERIES
-from iotdatapipeline_spark.plans.behavioral import ORACLE as _BH_ORACLE
-from iotdatapipeline_spark.plans.behavioral import QUERIES as _BH_QUERIES
-from iotdatapipeline_spark.plans.sketches import ORACLE as _SK_ORACLE
-from iotdatapipeline_spark.plans.sketches import QUERIES as _SK_QUERIES
-from iotdatapipeline_spark.plans.quality import ORACLE as _DQ_ORACLE
-from iotdatapipeline_spark.plans.quality import QUERIES as _DQ_QUERIES
-from iotdatapipeline_spark.plans.lakehouse import ORACLE as _LH_ORACLE
-from iotdatapipeline_spark.plans.lakehouse import QUERIES as _LH_QUERIES
-
-QUERIES.update(_AN_QUERIES)
-ORACLE.update(_AN_ORACLE)
-QUERIES.update(_OL_QUERIES)
-ORACLE.update(_OL_ORACLE)
-QUERIES.update(_ST_QUERIES)
-ORACLE.update(_ST_ORACLE)
-QUERIES.update(_SQ_QUERIES)
-ORACLE.update(_SQ_ORACLE)
-QUERIES.update(_TS_QUERIES)
-ORACLE.update(_TS_ORACLE)
-QUERIES.update(_BH_QUERIES)
-ORACLE.update(_BH_ORACLE)
-QUERIES.update(_SK_QUERIES)
-ORACLE.update(_SK_ORACLE)
-QUERIES.update(_DQ_QUERIES)
-ORACLE.update(_DQ_ORACLE)
-QUERIES.update(_LH_QUERIES)
-ORACLE.update(_LH_ORACLE)
+from iotdatapipeline_spark.plans import (  # noqa: F401  (import order = registry order)
+    core,
+    analytics,
+    olap,
+    streams,
+    subqueries,
+    timeseries,
+    behavioral,
+    sketches,
+    quality,
+    lakehouse,
+)
+from iotdatapipeline_spark.plans._registry import ORACLE, QUERIES
 
 __all__ = ["QUERIES", "ORACLE"]

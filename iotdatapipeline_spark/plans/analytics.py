@@ -37,20 +37,8 @@ from iotdatapipeline_spark.analytics import (
     stopword_hits,
     words,
 )
+from iotdatapipeline_spark.plans._registry import ORACLE, register, scratch
 from iotdatapipeline_spark.sources import load_table
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def _sql_stop_filter(col: str, stopwords: tuple[str, ...]) -> str:
@@ -4289,12 +4277,11 @@ def embeddings_bq_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     invalidate (iotdatapipeline_spark/matview.py BqVectorIndex;
     PQ/IVF retrains stay a modeling decision, documented there)."""
     import os
-    import tempfile
 
     from iotdatapipeline_spark.matview import BqVectorIndex
     from iotdatapipeline_spark.sources.versioned import VersionedTable
 
-    stem = tempfile.mkdtemp(prefix="iotdp_bqmaint_")
+    stem = scratch("iotdp_bqmaint_")
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(emb, cluster_by=["vec_id"])

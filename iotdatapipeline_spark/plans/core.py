@@ -38,20 +38,8 @@ from iotdatapipeline_spark.operators import (
     production_rollup,
     top1_per_group,
 )
+from iotdatapipeline_spark.plans._registry import register
 from iotdatapipeline_spark.sources import load_table, table_bytes
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 # The events table as the PLC reading stream (FIXTURES.md §C):

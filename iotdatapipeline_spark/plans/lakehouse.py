@@ -13,26 +13,13 @@ Delta/Iceberg packages available).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iotdatapipeline_spark.plans._registry import drain, register, scratch
 from iotdatapipeline_spark.sources import load_table
 from iotdatapipeline_spark.sources.versioned import VersionedTable
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def _latest_per_station(df: DataFrame) -> DataFrame:
@@ -111,7 +98,7 @@ def events_merge_upsert_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_cow_"), "tbl")
+    root = os.path.join(scratch("iotdp_cow_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(src, ["station"])
@@ -177,7 +164,7 @@ def events_versioned_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_cdf_"), "tbl")
+    root = os.path.join(scratch("iotdp_cdf_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(src, ["station"])
@@ -252,8 +239,6 @@ def events_versioned_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bulk commit (backfill, wide MERGE) scales with cluster I/O, not
     driver memory (pinned by the bulk-commit test in
     tests/test_versioned.py)."""
-    import time as _time
-
     from iotdatapipeline_spark.sources.versioned import (
         cdf_schema_ddl,
         register_versioned_cdf,
@@ -265,7 +250,7 @@ def events_versioned_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_cdfs_"), "tbl")
+    root = os.path.join(scratch("iotdp_cdfs_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(src, ["station"])
@@ -273,10 +258,6 @@ def events_versioned_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     table.merge_into(dele, ["station"], when_matched="delete")
     n_versions = table.version()
 
-    import uuid as _uuid
-
-    work = tempfile.mkdtemp(prefix="iotdp_cdfs_run_")
-    sink = f"cdf_stream_{_uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.format("versioned_cdf")
         .option("root", root)
@@ -284,25 +265,12 @@ def events_versioned_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("schema_ddl", cdf_schema_ddl(table))
         .load()
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            done = spark.table(sink).agg(F.max("_commit_version")).collect()[0][0]
-            if done is not None and done >= n_versions:
-                break
-            _time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return spark.table(sink).select(
+
+    def done(sink: DataFrame) -> bool:
+        last = sink.agg(F.max("_commit_version")).collect()[0][0]
+        return last is not None and last >= n_versions
+
+    return drain(stream, "cdf_stream", done).select(
         "station", "part", "ts_us", "v_cents", "version_id",
         "_change_type", "_commit_version",
     )
@@ -348,7 +316,7 @@ def events_versioned_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 4 == 0))
     ).select("station", "part", "ts_us", "v_cents")
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_evo_"), "tbl")
+    root = os.path.join(scratch("iotdp_evo_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(src, ["station"], schema_evolution=True)
@@ -392,7 +360,7 @@ def events_versioned_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum("event_id").cast("long").alias("id_sum"),
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_zorder_"), "tbl")
+    root = os.path.join(scratch("iotdp_zorder_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(agg, n_files=16, cluster_by=["station"])
     table.optimize(16, zorder_by=("station", "vbucket"))
@@ -438,7 +406,7 @@ def events_versioned_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Time travel still sees version 1 intact (asserted)."""
     r = _readings(spark, sf_dir)
     base = _latest_per_station(r)
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_dv_"), "tbl")
+    root = os.path.join(scratch("iotdp_dv_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     files_v1 = table.history()[0]["files"]
@@ -502,7 +470,7 @@ def events_versioned_column_mapping(spark: SparkSession, sf_dir: str) -> DataFra
     names forever, ``optimize`` clears the debt)."""
     r = _readings(spark, sf_dir)
     base = _latest_per_station(r.filter(F.col("event_id") % 3 != 0))
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_cmap_"), "tbl")
+    root = os.path.join(scratch("iotdp_cmap_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     files_v1 = table.history()[0]["files"]
@@ -583,7 +551,7 @@ def events_versioned_dv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_dvu_"), "tbl")
+    root = os.path.join(scratch("iotdp_dvu_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     files_v1 = set(table.history()[0]["files"])
@@ -657,7 +625,7 @@ def events_versioned_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     regress to a full scan."""
     r = _readings(spark, sf_dir)
     base = _latest_per_station(r)
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_skip_"), "tbl")
+    root = os.path.join(scratch("iotdp_skip_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     kept, total = table.pruned_files({"station": (0, 1)})
@@ -737,7 +705,7 @@ def events_versioned_check_constraints(spark: SparkSession, sf_dir: str) -> Data
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_chk_"), "tbl")
+    root = os.path.join(scratch("iotdp_chk_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.add_constraint("part_nonempty", "length(part) > 0")
@@ -826,7 +794,7 @@ def events_versioned_clone_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_clone_")
+    stem = scratch("iotdp_clone_")
     table = VersionedTable(spark, os.path.join(stem, "src"))
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(src, ["station"])  # v2 — the clone point
@@ -892,7 +860,7 @@ def events_versioned_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> Dat
     sources/versioned.py (add_bloom_index, _bloom_of, _keep_files)."""
     r = _readings(spark, sf_dir)
     base = _latest_per_station(r.filter(F.col("event_id") % 3 != 0))
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_bloom_"), "tbl")
+    root = os.path.join(scratch("iotdp_bloom_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.add_bloom_index(["version_id"])
@@ -948,7 +916,7 @@ def events_versioned_widen_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     base = _latest_per_station(r.filter(F.col("event_id") % 3 != 0)).withColumn(
         "v_cents", F.col("v_cents").cast("int")
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_widen_"), "tbl")
+    root = os.path.join(scratch("iotdp_widen_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     if dict(table.snapshot().dtypes)["v_cents"] != "int":
@@ -1025,7 +993,7 @@ def events_versioned_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_upd = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_cdfapply_")
+    stem = scratch("iotdp_cdfapply_")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(base, n_files=8, cluster_by=["station"])
     src.merge_into(src_upd, ["station"])  # v2
@@ -1098,7 +1066,7 @@ def events_versioned_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     _candidates_by_key_bounds)."""
     r = _readings(spark, sf_dir)
     base = _latest_per_station(r.filter(F.col("event_id") % 3 != 0))
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_bmerge_"), "tbl")
+    root = os.path.join(scratch("iotdp_bmerge_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.add_bloom_index(["version_id"])
@@ -1172,7 +1140,7 @@ def events_versioned_generated_column(spark: SparkSession, sf_dir: str) -> DataF
     base = _latest_per_station(r.filter(F.col("event_id") % 3 != 0)).withColumn(
         "v_kilo", F.floor(F.col("v_cents") / 1000).cast("long")
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_gen_"), "tbl")
+    root = os.path.join(scratch("iotdp_gen_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.set_generated("v_kilo", "CAST(floor(v_cents / 1000) AS BIGINT)")
@@ -1267,7 +1235,7 @@ def events_versioned_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_cvt_")
+    stem = scratch("iotdp_cvt_")
     lake = os.path.join(stem, "lake")
     # a grown lake: two appends, different partitioning, disjoint rows
     base.filter(F.col("station") % 2 == 0).repartition(3).write.parquet(lake)
@@ -1366,7 +1334,7 @@ def events_merge_guarded_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _readings(spark, sf_dir)
     base = _latest_per_station(r.filter(F.col("event_id") % 3 != 0))
     src = _latest_per_station(r.filter(F.col("event_id") % 3 == 0))
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_gup_"), "tbl")
+    root = os.path.join(scratch("iotdp_gup_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(src, ["station"], when_matched_condition="s.version_id > t.version_id")
@@ -1420,7 +1388,7 @@ def events_versioned_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _latest_per_station(r.filter(F.col("event_id") % 3 != 0)).select(
         "station", "v_cents"
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_ivm_")
+    stem = scratch("iotdp_ivm_")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(base, n_files=8, cluster_by=["station"])
     upd = (
@@ -1529,7 +1497,7 @@ def events_versioned_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_id_"), "tbl")
+    root = os.path.join(scratch("iotdp_id_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.set_identity("rid")
@@ -1598,7 +1566,7 @@ def events_merge_sync_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter(F.col("station") % 3 != 0)
         .withColumn("v_cents", F.col("v_cents") + F.lit(5000))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_sync_"), "tbl")
+    root = os.path.join(scratch("iotdp_sync_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(
@@ -1701,7 +1669,7 @@ def events_versioned_cdf_commitfiles(spark: SparkSession, sf_dir: str) -> DataFr
     s2 = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 1))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_cdfc_"), "tbl")
+    root = os.path.join(scratch("iotdp_cdfc_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(s1, ["station"])
@@ -1782,7 +1750,7 @@ def events_merge_concurrent_rebase(spark: SparkSession, sf_dir: str) -> DataFram
     src_b = base.filter(F.col("station") % 9 == 0).withColumn(
         "station", F.col("station") + F.lit(10000000)
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_ccw_"), "tbl")
+    root = os.path.join(scratch("iotdp_ccw_"), "tbl")
     a = VersionedTable(spark, root)
     a.create(base, n_files=8, cluster_by=["station"])
     b = VersionedTable(spark, root)
@@ -1847,7 +1815,7 @@ def events_delete_concurrent_rebase(spark: SparkSession, sf_dir: str) -> DataFra
         base.filter((F.col("station") % 7 == 0) & (F.col("station") < thr // 2))
         .withColumn("v_cents", F.col("v_cents") + F.lit(1234))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_dcr_"), "tbl")
+    root = os.path.join(scratch("iotdp_dcr_"), "tbl")
     a = VersionedTable(spark, root)
     a.create(base, n_files=8, cluster_by=["station"])
     b = VersionedTable(spark, root)
@@ -1917,7 +1885,7 @@ def events_versioned_mv_reseed(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _latest_per_station(r.filter(F.col("event_id") % 3 != 0)).select(
         "station", (F.col("station") % 8).alias("bucket"), "v_cents"
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_mvrs_")
+    stem = scratch("iotdp_mvrs_")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(base, n_files=8, cluster_by=["station"])
     mv = MaterializedView.create(
@@ -2000,7 +1968,7 @@ def events_versioned_ivm_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r = _readings(spark, sf_dir)
     base = r.filter(F.col("event_id") % 3 != 0).select("event_id", "station", "v_cents")
-    stem = tempfile.mkdtemp(prefix="iotdp_ivmmm_")
+    stem = scratch("iotdp_ivmmm_")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(base, n_files=8, cluster_by=["station"])
     upd = (
@@ -2092,7 +2060,7 @@ def events_versioned_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = base.select("station").distinct().withColumn(
         "grp", F.col("station") % 8
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_ivmj_")
+    stem = scratch("iotdp_ivmj_")
     a_root, b_root = os.path.join(stem, "fact"), os.path.join(stem, "dim")
     v_root = os.path.join(stem, "view")
     A = VersionedTable(spark, a_root)
@@ -2211,7 +2179,7 @@ def events_versioned_ivm_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame
     dim = base.select("station").distinct().withColumn(
         "grp", F.col("station") % 8
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_ivmaj_")
+    stem = scratch("iotdp_ivmaj_")
     a_root, b_root = os.path.join(stem, "fact"), os.path.join(stem, "dim")
     v_root = os.path.join(stem, "view")
     A = VersionedTable(spark, a_root)
@@ -2316,7 +2284,7 @@ def events_merge_insert_condition(spark: SparkSession, sf_dir: str) -> DataFrame
     src = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="iotdp_wnm_"), "tbl")
+    root = os.path.join(scratch("iotdp_wnm_"), "tbl")
     table = VersionedTable(spark, root)
     table.create(base, n_files=8, cluster_by=["station"])
     table.merge_into(src, ["station"], when_not_matched_condition="v_cents % 2 = 0")
@@ -2384,7 +2352,7 @@ def events_versioned_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_upd = _latest_per_station(
         r.filter((F.col("event_id") % 3 == 0) & (F.col("station") % 5 == 0))
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_scd2_")
+    stem = scratch("iotdp_scd2_")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(base, n_files=8, cluster_by=["station"])
     src.merge_into(src_upd, ["station"])  # v2
@@ -2468,7 +2436,7 @@ def events_versioned_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("v_cents", F.col("event_id")).alias("v_cents"),
         )
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_mv_")
+    stem = scratch("iotdp_mv_")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(base, n_files=8, cluster_by=["station"])
     mv = MaterializedView.create(
@@ -2547,7 +2515,7 @@ def events_versioned_mv_join_refresh(spark: SparkSession, sf_dir: str) -> DataFr
         "event_id", "station", "v_cents"
     )
     dim = base.select("station").distinct().withColumn("grp", F.col("station") % 8)
-    stem = tempfile.mkdtemp(prefix="iotdp_mvj_")
+    stem = scratch("iotdp_mvj_")
     A = VersionedTable(spark, os.path.join(stem, "fact"))
     A.create(base, n_files=8, cluster_by=["station"])
     B = VersionedTable(spark, os.path.join(stem, "dim"))
@@ -2636,7 +2604,7 @@ def events_versioned_ivm_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("event_type").alias("part"),
         )
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_ivmdc_")
+    stem = scratch("iotdp_ivmdc_")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(base, n_files=8, cluster_by=["event_id"])
     a = MaterializedView.create(
@@ -2719,7 +2687,7 @@ def events_versioned_ivm_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("part"),
         F.col("user_id").alias("station"),
     )
-    stem = tempfile.mkdtemp(prefix="iotdp_ivmkmv_")
+    stem = scratch("iotdp_ivmkmv_")
     src = VersionedTable(spark, os.path.join(stem, "src"))
     src.create(ev.filter(F.col("event_id") % 3 != 0), n_files=8, cluster_by=["event_id"])
     mv = MaterializedView.create(

@@ -11,20 +11,8 @@ from pyspark.sql import functions as F
 
 from iotdatapipeline_spark.functions import expand_block
 from iotdatapipeline_spark.operators import asof_join, salted_agg
+from iotdatapipeline_spark.plans._registry import register
 from iotdatapipeline_spark.sources import load_table, table_bytes
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 @register(

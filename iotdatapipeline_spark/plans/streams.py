@@ -20,9 +20,6 @@ are covered by unit tests instead.
 from __future__ import annotations
 
 import os
-import tempfile
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +31,7 @@ from iotdatapipeline_spark.analytics.multimodal import (
     resize_images,
     sample_frames,
 )
+from iotdatapipeline_spark.plans._registry import drain, register, scratch
 from iotdatapipeline_spark.sources import load_table
 from iotdatapipeline_spark.streaming.source import (
     readings_stream,
@@ -46,19 +44,6 @@ from iotdatapipeline_spark.streaming.stateful import (
     zscore_alert_machine,
 )
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
-
 
 # ── Streaming gate ──────────────────────────────────────────────────────────
 
@@ -67,21 +52,9 @@ def _run_stream(spark: SparkSession, sf_dir: str, emit_mode: str) -> DataFrame:
     """Replay the events fixture through the stateful machine with
     ``availableNow`` (4 chunks → multi-batch state carry-over) and
     return the drained output as a batch DataFrame."""
-    work = tempfile.mkdtemp(prefix=f"iotdp_stream_{emit_mode}_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=4)
+    replay = stage_replay_chunks(spark, sf_dir, scratch(f"iotdp_stream_{emit_mode}_"), n_chunks=4)
     stream = readings_stream(spark, replay, max_files_per_trigger=1)
-    out = counter_state_machine(stream, emit_mode=emit_mode)
-    sink = f"stream_gate_{emit_mode}_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(counter_state_machine(stream, emit_mode=emit_mode), f"stream_gate_{emit_mode}")
 
 
 @register(
@@ -288,9 +261,8 @@ def stream_limpieza_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a production path; the production operator is the
     timeout-armed ``counter_state_machine`` itself, whose state is
     partitioned by (station, part) and scales with keys, not rows."""
-    work = tempfile.mkdtemp(prefix="iotdp_limpieza_")
     replay = stage_replay_chunks(
-        spark, sf_dir, os.path.join(work, "replay"), n_chunks=_T5_N_CHUNKS
+        spark, sf_dir, scratch("iotdp_limpieza_"), n_chunks=_T5_N_CHUNKS
     )
     stream = readings_stream(spark, replay, max_files_per_trigger=1).withWatermark(
         "ts", "0 seconds"
@@ -298,18 +270,8 @@ def stream_limpieza_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = counter_state_machine(
         stream, emit_mode="row", timeout_ms=_T5_GAP_MS, timeout_mode="event"
     )
-    sink = f"stream_limpieza_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(sink)
+        drain(out, "stream_limpieza")
         .filter(F.col("row_kind") == "limpieza")
         .groupBy("station", "part")
         .agg(F.count(F.lit(1)).cast("long").alias("limpieza_count"))
@@ -342,8 +304,7 @@ def stream_limpieza_wallclock(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key count converges (bounded by a deadline), the same
     stop-condition a live ``--follow`` supervisor applies; a deadline
     miss returns the partial set and fails the gate loudly."""
-    work = tempfile.mkdtemp(prefix="iotdp_limpieza_wc_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=1)
+    replay = stage_replay_chunks(spark, sf_dir, scratch("iotdp_limpieza_wc_"), n_chunks=1)
     n_keys = (
         spark.read.parquet(replay).select("station", "part").distinct().count()
     )
@@ -351,31 +312,18 @@ def stream_limpieza_wallclock(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = counter_state_machine(
         stream, emit_mode="reference", timeout_ms=_T5W_GAP_MS, timeout_mode="processing"
     )
-    sink = f"stream_limpieza_wc_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
+
+    def fired(sink: DataFrame) -> DataFrame:
+        return sink.filter(F.col("row_kind") == "limpieza").select("station", "part").distinct()
+
+    sink = drain(
+        out,
+        "stream_limpieza_wc",
+        lambda sink: fired(sink).count() >= n_keys,
+        every="500 milliseconds",
+        deadline_s=_T5W_DEADLINE_S,
     )
-    fired = (
-        spark.table(sink)
-        .filter(F.col("row_kind") == "limpieza")
-        .select("station", "part")
-        .distinct()
-    )
-    deadline = time.monotonic() + _T5W_DEADLINE_S
-    try:
-        while time.monotonic() < deadline:
-            if fired.count() >= n_keys:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    return fired
+    return fired(sink)
 
 
 #: T2 gate parameters. The consumed set is the deterministic output of
@@ -421,7 +369,7 @@ def stream_drop_oldest_backpressure(spark: SparkSession, sf_dir: str) -> DataFra
     semantics."""
     from iotdatapipeline_spark.streaming.source import stage_bounded_replay
 
-    work = tempfile.mkdtemp(prefix="iotdp_t2_")
+    work = scratch("iotdp_t2_")
     replay, consumed, _dropped = stage_bounded_replay(
         spark,
         sf_dir,
@@ -432,19 +380,8 @@ def stream_drop_oldest_backpressure(spark: SparkSession, sf_dir: str) -> DataFra
     )
     if tuple(consumed) != _T2_CONSUMED:
         raise RuntimeError(f"queue schedule drifted: {consumed} != {_T2_CONSUMED}")
-    stream = readings_stream(spark, replay)
-    sink = f"stream_t2_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(sink)
+        drain(readings_stream(spark, replay), "stream_t2")
         .groupBy("station")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_readings"),
@@ -490,11 +427,10 @@ def events_late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark only bounds state); the late-data half of T7 is pinned
     by ``events_late_window``. The reference itself has no late/dup
     story (arrival IS processing order, Prensas.py:602-604)."""
-    work = tempfile.mkdtemp(prefix="iotdp_t7_")
     replay = stage_ooo_replay_chunks(
         spark,
         sf_dir,
-        os.path.join(work, "replay"),
+        scratch("iotdp_t7_"),
         n_chunks=_T7_N_CHUNKS,
         jitter_us=_T7_JITTER_US,
         dup_mod=_T7_DUP_MOD,
@@ -504,17 +440,9 @@ def events_late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", f"{_T7_DEDUP_DELAY_US} microseconds")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    sink = f"t7_late_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    return drain(stream, "t7_late_dedup").select(
+        "station", "part", "ts", "event_id", "value", "counter"
     )
-    q.awaitTermination()
-    return spark.table(sink).select("station", "part", "ts", "event_id", "value", "counter")
 
 
 #: late-window gate: watermark delay 30 min + 500 µs. Event times are
@@ -589,11 +517,10 @@ def events_late_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset no second-aligned window end can tie with (all four
     <-vs-≤ variants produce identical output on the fixture — the
     twin is exact, not approximate)."""
-    work = tempfile.mkdtemp(prefix="iotdp_t7w_")
     replay = stage_ooo_replay_chunks(
         spark,
         sf_dir,
-        os.path.join(work, "replay"),
+        scratch("iotdp_t7w_"),
         n_chunks=_T7_N_CHUNKS,
         jitter_us=_T7_JITTER_US,
         dup_mod=0,
@@ -608,17 +535,9 @@ def events_late_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("station", F.col("w.start").alias("window_start"), "n_events", "counter_sum")
     )
-    sink = f"t7_late_window_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    return drain(stream, "t7_late_window").select(
+        "station", "window_start", "n_events", "counter_sum"
     )
-    q.awaitTermination()
-    return spark.table(sink).select("station", "window_start", "n_events", "counter_sum")
 
 
 @register(
@@ -762,7 +681,7 @@ def dbapi_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd = _dbapi_latest(
         r.filter((F.col("event_id") % 2 == 1) & (F.col("station") % 3 == 0))
     )
-    db = os.path.join(tempfile.mkdtemp(prefix="iotdp_dbapi_sink_"), "plant.db")
+    db = os.path.join(scratch("iotdp_dbapi_sink_"), "plant.db")
     con = sqlite3.connect(db)
     con.execute(
         "CREATE TABLE records (station INTEGER PRIMARY KEY, part TEXT,"
@@ -856,15 +775,11 @@ def plc_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once by the [start, end) offset contract, so the drained
     set (not its batch boundaries) is deterministic and the per-station
     totals carry a full value-hash oracle."""
-    import time as _time
-
     from iotdatapipeline_spark.sources.plc_source import register_plcsim
 
     register_plcsim(spark)
     stations, ticks, registers = 20, 8, 4
     expected = stations * ticks * registers
-    work = tempfile.mkdtemp(prefix="iotdp_plcstream_")
-    sink = f"plc_stream_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.format("plcsim")
         .option("stations", stations)
@@ -873,29 +788,12 @@ def plc_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("ticks_per_batch", 2)
         .load()
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            if spark.table(sink).count() >= expected:
-                break
-            _time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination()
-    got = spark.table(sink).count()
+    sink = drain(stream, "plc_stream", lambda sink: sink.count() >= expected)
+    got = sink.count()
     if got != expected:
         raise RuntimeError(f"stream drained {got} rows, expected {expected}")
     return (
-        spark.table(sink)
-        .groupBy("station")
+        sink.groupBy("station")
         .agg(
             F.count(F.lit(1)).alias("n_readings"),
             F.sum("word").cast("long").alias("word_sum"),
@@ -939,8 +837,7 @@ def events_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    work = tempfile.mkdtemp(prefix="iotdp_chain_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=4)
+    replay = stage_replay_chunks(spark, sf_dir, scratch("iotdp_chain_"), n_chunks=4)
     max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
     sentinel = pa.table(
         {
@@ -988,17 +885,7 @@ def events_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_5min_buckets",
         )
     )
-    sink = f"chain_agg_{uuid.uuid4().hex[:8]}"
-    q = (
-        hourly.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).filter(F.col("station") >= 0)
+    return drain(hourly, "chain_agg").filter(F.col("station") >= 0)
 
 
 #: stream-stream join gate: 6 h join window, 7 h watermark delay.
@@ -1038,8 +925,7 @@ def events_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream join with watermark-driven state eviction, and the drained
     append output must hash-match the batch interval join (oracle).
     See _SSJ_* above for the no-lost-matches proof sketch."""
-    work = tempfile.mkdtemp(prefix="iotdp_ssj_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=5)
+    replay = stage_replay_chunks(spark, sf_dir, scratch("iotdp_ssj_"), n_chunks=5)
     clicks = (
         readings_stream(spark, replay, max_files_per_trigger=1)
         .withWatermark("ts", _SSJ_DELAY)
@@ -1067,17 +953,7 @@ def events_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {_SSJ_WINDOW}")),
         "inner",
     )
-    sink = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    return drain(joined, "ssj").select(
         "station",
         "purchase_id",
         "click_id",
@@ -1141,8 +1017,7 @@ def events_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFra
     missed the last two unmatched purchases — and worth pinning: at
     scale, a slow/idle side holding the global watermark back is
     exactly how outer-join results get delayed in production."""
-    work = tempfile.mkdtemp(prefix="iotdp_ssjl_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=5)
+    replay = stage_replay_chunks(spark, sf_dir, scratch("iotdp_ssjl_"), n_chunks=5)
     clicks = (
         readings_stream(spark, replay, max_files_per_trigger=1)
         .withWatermark("ts", _SSJ_DELAY)
@@ -1170,17 +1045,7 @@ def events_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFra
         & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {_SSJ_WINDOW}")),
         "left_outer",
     )
-    sink = f"ssjl_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select("station", "purchase_id", "click_id")
+    return drain(joined, "ssjl").select("station", "purchase_id", "click_id")
 
 
 # ── Multimodal gate ─────────────────────────────────────────────────────────
@@ -1377,8 +1242,7 @@ def events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     supervisor layer, T8). Drained availableNow output must equal the
     plain batch join row-for-row — every reading appears exactly once,
     enriched."""
-    work = tempfile.mkdtemp(prefix="iotdp_sse_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=4)
+    replay = stage_replay_chunks(spark, sf_dir, scratch("iotdp_sse_"), n_chunks=4)
     dim = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("nkey"),
         F.col("n_name").alias("region_name"),
@@ -1394,17 +1258,7 @@ def events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "region_name",
         (F.col("counter").cast("long") * F.col("mult")).cast("long").alias("weighted"),
     )
-    sink = f"sse_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(enriched, "sse")
 
 
 @register(
@@ -1445,21 +1299,9 @@ def events_stream_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is a ≤32-long integer ring per station —
     bounded regardless of stream length; each micro-batch shuffles
     only on station, same key the batch window uses."""
-    work = tempfile.mkdtemp(prefix="iotdp_stream_zscore_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=4)
+    replay = stage_replay_chunks(spark, sf_dir, scratch("iotdp_stream_zscore_"), n_chunks=4)
     stream = readings_stream(spark, replay, max_files_per_trigger=1)
-    out = zscore_alert_machine(stream)
-    sink = f"stream_zscore_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(zscore_alert_machine(stream), "stream_zscore")
 
 
 def _avghash_neardup_sql() -> str:
@@ -1575,21 +1417,9 @@ def events_stream_alert_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     (running-max emit state) and the z-score ring (bounded-window
     moments) — this one is the on-emit-only timer latch
     (Prensas.py:663-677's one-shot shape)."""
-    work = tempfile.mkdtemp(prefix="iotdp_stream_debounce_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=4)
+    replay = stage_replay_chunks(spark, sf_dir, scratch("iotdp_stream_debounce_"), n_chunks=4)
     stream = readings_stream(spark, replay, max_files_per_trigger=1)
-    out = debounce_machine(stream)
-    sink = f"stream_debounce_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(debounce_machine(stream), "stream_debounce")
 
 
 @register(
@@ -1649,8 +1479,7 @@ def events_click_purchase_full_join(spark: SparkSession, sf_dir: str) -> DataFra
     OTHER side's event time, which is exactly how Spark sizes
     symmetric-hash join state for eviction at scale.  Oracle =
     batch interval join + both watermark-gated NOT EXISTS arms."""
-    work = tempfile.mkdtemp(prefix="iotdp_ssjf_")
-    replay = stage_replay_chunks(spark, sf_dir, os.path.join(work, "replay"), n_chunks=5)
+    replay = stage_replay_chunks(spark, sf_dir, scratch("iotdp_ssjf_"), n_chunks=5)
     clicks = (
         readings_stream(spark, replay, max_files_per_trigger=1)
         .withWatermark("ts", _SSJ_DELAY)
@@ -1678,17 +1507,7 @@ def events_click_purchase_full_join(spark: SparkSession, sf_dir: str) -> DataFra
         & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {_SSJ_WINDOW}")),
         "full_outer",
     )
-    sink = f"ssjf_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    return drain(joined, "ssjf").select(
         F.coalesce(F.col("station"), F.col("c_station")).alias("station"),
         "purchase_id",
         "click_id",
@@ -1834,7 +1653,7 @@ def history_append_replayed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100).cast("long").alias("v"),
         F.col("event_id"),
     )
-    work = tempfile.mkdtemp(prefix="iotdp_k3_")
+    work = scratch("iotdp_k3_")
     path = os.path.join(work, "history")
     sink = append_foreach_batch(path)
     batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
@@ -1902,7 +1721,7 @@ def fanout_sinks_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("update"))
         .alias("row_kind"),
     )
-    work = tempfile.mkdtemp(prefix="iotdp_t9_")
+    work = scratch("iotdp_t9_")
     up, hp, lp = (os.path.join(work, d) for d in ("records", "history", "limpieza"))
     sink = fanout_foreach_batch(
         updates_path=up,

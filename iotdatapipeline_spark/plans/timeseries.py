@@ -24,20 +24,8 @@ from iotdatapipeline_spark.operators.timeseries import (
     resample_ffill,
     resample_interpolate,
 )
+from iotdatapipeline_spark.plans._registry import register
 from iotdatapipeline_spark.sources import load_table
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def _readings(spark: SparkSession, sf_dir: str) -> DataFrame:

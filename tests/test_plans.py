@@ -360,22 +360,44 @@ class TestRegistryContract:
             assert not leftover, f"{name}: suspicious tables {leftover}"
 
 
+def _cartesian_or_rowwise_python(spark, sf_dir, names) -> dict[str, list[str]]:
+    """The queries among ``names`` whose plan holds a CartesianProduct
+    (unbounded n×m blowup) or BatchEvalPython (row-at-a-time Python UDF
+    — the 10-100× slow path vs Arrow), with what each holds. Pandas/Arrow
+    UDFs (ArrowEvalPython, MapInPandas, FlatMap*) and 1-row
+    BroadcastNestedLoopJoin scalars remain allowed."""
+    bad = {}
+    for name in names:
+        plan = _plan(QUERIES[name](spark, sf_dir))
+        flags = [f for f in ("CartesianProduct", "BatchEvalPython") if f in plan]
+        if flags:
+            bad[name] = flags
+    return bad
+
+
 class TestGlobalPlanAudit:
     def test_no_query_uses_cartesian_or_rowwise_python(self, spark, sf_small):
-        """Registry-wide scale gate: no registered query may plan a
-        CartesianProduct (unbounded n×m blowup) or BatchEvalPython
-        (row-at-a-time Python UDF — the 10-100× slow path vs Arrow).
-        Pandas/Arrow UDFs (ArrowEvalPython, MapInPandas, FlatMap*)
-        and 1-row BroadcastNestedLoopJoin scalars remain allowed.
-        Catches a regression in ANY query, including future ones."""
-        bad = {}
-        for name, fn in sorted(QUERIES.items()):
-            plan = fn(spark, sf_small)._jdf.queryExecution().executedPlan().toString()
-            flags = [
-                f for f in ("CartesianProduct", "BatchEvalPython") if f in plan
-            ]
-            if flags:
-                bad[name] = flags
+        """Registry-wide scale gate over every registered query,
+        including future ones."""
+        bad = _cartesian_or_rowwise_python(spark, sf_small, sorted(QUERIES))
+        assert not bad, bad
+
+
+class TestHeadlinePlanAudit:
+    def test_headline_uses_no_cartesian_or_rowwise_python(self, spark, sf_small):
+        """The registry-wide audit's check over the sf0.1 headline set
+        (``bench.HEADLINE`` minus ``embeddings_pq_index_topk``, which
+        materializes its index outside the working tree), at the scale
+        the headline runs: a cheap default-run sibling of the slow
+        registry-wide sweep."""
+        import os
+
+        import bench
+
+        names = [n for n in bench.HEADLINE if n != "embeddings_pq_index_topk"]
+        assert len(names) == 9
+        sf_headline = os.path.join(os.path.dirname(sf_small), "sf0.1")
+        bad = _cartesian_or_rowwise_python(spark, sf_headline, names)
         assert not bad, bad
 
 

@@ -1564,7 +1564,7 @@ class TestChainedStreamingAggregation:
     rollup exactly."""
 
     def test_stream_equals_batch_rollup(self, spark, sf_small):
-        from iotdatapipeline_spark.plans.streams import QUERIES as SQ
+        from iotdatapipeline_spark.plans import QUERIES as SQ
         from iotdatapipeline_spark.sources import load_table
         from pyspark.sql import functions as F
 
