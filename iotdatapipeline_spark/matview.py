@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -135,6 +135,20 @@ class _MaintainedTable:
     def _applied_txn(self) -> int | None:
         seen = self.table().txn(_TXN_APP)
         return None if seen is None else seen[0]
+
+    def _refresh_step(self, step: Callable[[], object], cursor: int) -> None:
+        """Run one incremental refresh ``step`` toward ``cursor``. A
+        range that nets to ZERO changes (source ``optimize`` and other
+        layout-only commits) makes the step commit nothing to the view,
+        so stamp the cursor with a metadata-only txn commit — otherwise
+        every later refresh re-derives the same no-op range, and a
+        source ``expire_versions`` past it forces a reseed although
+        nothing changed."""
+        t = self.table()
+        before = t.version()
+        step()
+        if t.version() == before:
+            t.record_txn(_TXN_APP, cursor)
 
 
 class MaterializedView(_MaintainedTable):
@@ -351,16 +365,7 @@ class MaterializedView(_MaintainedTable):
                 "view at the source's current version, or retain more "
                 "source history (expire_versions keep_last/retention)."
             ) from e
-        before = self.table().version()
-        self._sink(spec)(feed, v_src)
-        if self.table().version() == before:
-            # the range netted to ZERO changes (source optimize /
-            # layout-only commits): the sink commits nothing, so stamp
-            # the cursor with a metadata-only txn commit — otherwise
-            # every later refresh re-pays changes() over the same
-            # no-op range plus an unpruned view scan (empty deltas
-            # yield no pruning predicate)
-            self.table().record_txn(_TXN_APP, v_src)
+        self._refresh_step(lambda: self._sink(spec)(feed, v_src), v_src)
         return v_src
 
     def reseed(self) -> int:
@@ -521,7 +526,7 @@ class BqVectorIndex(_MaintainedTable):
         feed = ups.unionByName(dels).withColumn(
             "_commit_version", F.lit(v_src).cast("long")
         )
-        self._apply(feed, v_src)
+        self._refresh_step(lambda: self._apply(feed, v_src), v_src)
         return v_src
 
     def reseed(self) -> int:
@@ -666,7 +671,10 @@ class _TwoSourceView(_MaintainedTable):
             return now_a, now_b
         va, vb = applied
         try:
-            self._step((va, now_a), (vb, now_b))
+            self._refresh_step(
+                lambda: self._step((va, now_a), (vb, now_b)),
+                now_a * CURSOR_RADIX + now_b,
+            )
         except VersionExpired as e:
             raise ViewHistoryExpired(
                 f"view at {self.root}: source history needed for an "

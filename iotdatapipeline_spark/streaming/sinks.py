@@ -955,13 +955,7 @@ def cdf_ivm_agg_join_apply(
         "_change_type",
         F.when(F.col("__net") > 0, F.lit("insert")).otherwise(F.lit("delete")),
     ).drop("__net")
-    before = vt.version()
     sink(feed, packed)
-    if vt.version() == before:
-        # the range netted to zero joined-row changes (layout-only
-        # commits on both sides): stamp the cursor so the next step
-        # doesn't re-derive the same no-op range
-        vt.record_txn(app, packed)
     return vt.version()
 
 

@@ -153,7 +153,7 @@ class TestPlanShapes:
     def test_inverted_index_broadcast_dfreq_join(self, spark, sf_small):
         # r14 (VERDICT item 6 flip-point re-measurement): the window
         # form that r13 shipped measured slower than the join form at
-        # sf0.1, x10 AND x40 (tools/bench_inverted_ab.py), so doc_freq
+        # sf0.1, x10 AND x40 (`git show a5c0c43:tools/bench_inverted_ab.py`), so doc_freq
         # is a map-combined groupBy(term) aggregate broadcast onto the
         # head-20 frame again — never a cartesian / nested-loop shape
         plan = _plan(QUERIES["docs_inverted_index"](spark, sf_small))

@@ -2649,41 +2649,93 @@ class TestMvRefreshBoundaries:
         mv.refresh()  # range crosses the restore boundary -> derivation
         check()
 
-    def test_empty_feed_advances_cursor(self, spark, tmp_path):
+    @pytest.mark.parametrize(
+        "kind",
+        [
+            "MaterializedView",
+            "BqVectorIndex",
+            "JoinMaterializedView",
+            "AggJoinMaterializedView",
+        ],
+    )
+    def test_empty_feed_advances_cursor(self, spark, tmp_path, kind):
         """r13 (ADVICE): a refresh over a range that nets to ZERO
         changes (layout-only source commits) must still advance the
         applied cursor — via a metadata-only txn stamp — so the next
         refresh is a version-pointer read instead of re-paying
-        changes() + an unpruned view scan over the same no-op range."""
+        changes() + an unpruned view scan over the same no-op range.
+        Every maintained view kind; the two-source kinds optimize
+        their ``a`` side."""
         from pyspark.sql import functions as F
 
-        from iotdatapipeline_spark.matview import MaterializedView
+        from iotdatapipeline_spark import matview
         from iotdatapipeline_spark.sources.versioned import VersionedTable
+        from iotdatapipeline_spark.streaming.sinks import CURSOR_RADIX
 
-        src = VersionedTable(spark, str(tmp_path / "src"))
-        src.create(
-            spark.range(60).select(
-                F.col("id").alias("k"), (F.col("id") % 3).alias("g"),
-                F.lit(1).alias("v"),
-            ),
-            n_files=4,
-            cluster_by=["k"],
-        )
-        mv = MaterializedView.create(
-            spark, str(tmp_path / "mv"), str(tmp_path / "src"),
-            group_by=["g"], sum_cols=["v"], keys=["k"],
-        )
-        assert mv._applied_txn() == 1
+        src_root, root = str(tmp_path / "src"), str(tmp_path / "v")
+        src = VersionedTable(spark, src_root)
+        if kind == "BqVectorIndex":
+            src.create(
+                load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
+                    "vec_id", "embedding"
+                ),
+                n_files=4,
+                cluster_by=["vec_id"],
+            )
+            view = matview.BqVectorIndex.create(spark, root, src_root)
+        else:
+            src.create(
+                spark.range(60).select(
+                    F.col("id").alias("k"), (F.col("id") % 3).alias("g"),
+                    F.lit(1).alias("v"),
+                ),
+                n_files=4,
+                cluster_by=["k"],
+            )
+        if kind == "MaterializedView":
+            view = matview.MaterializedView.create(
+                spark, root, src_root, group_by=["g"], sum_cols=["v"], keys=["k"]
+            )
+        two_source = kind in ("JoinMaterializedView", "AggJoinMaterializedView")
+        if two_source:
+            dim_root = str(tmp_path / "dim")
+            VersionedTable(spark, dim_root).create(
+                spark.range(3).select(
+                    F.col("id").alias("g"), (F.col("id") % 2).alias("h")
+                ),
+                cluster_by=["g"],
+            )
+        if kind == "JoinMaterializedView":
+            view = matview.JoinMaterializedView.create(
+                spark, root, src_root, dim_root, ["g"], "k", "g"
+            )
+        if kind == "AggJoinMaterializedView":
+            view = matview.AggJoinMaterializedView.create(
+                spark, root, src_root, dim_root, join_keys=["g"],
+                group_by=["h"], sum_cols=["v"], a_key="k", b_key="g",
+            )
+
+        def cursor(v_src):
+            return v_src * CURSOR_RADIX + 1 if two_source else v_src
+
+        assert view._applied_txn() == cursor(1)
         src.optimize(n_files=2)  # v2: layout only — empty logical feed
-        assert mv.refresh() == 2
+        view.refresh()
         # the cursor moved past the no-op range (the r13 fix): the
         # stamp is a metadata-only "txn" commit on the view table
-        assert mv._applied_txn() == 2
-        assert mv.table()._read_manifest(mv.table().version())["op"] == "txn"
+        assert view._applied_txn() == cursor(2)
+        assert view.table()._read_manifest(view.table().version())["op"] == "txn"
         # and the NEXT refresh is now a pure pointer read — no commit
-        v = mv.table().version()
-        assert mv.refresh() == 2
-        assert mv.table().version() == v
+        v = view.table().version()
+        view.refresh()
+        assert view.table().version() == v
+        if kind == "BqVectorIndex":
+            # history behind the stamped cursor may expire: a refresh
+            # over a vector-free schema change needs no reseed
+            src.add_column("note", "string")  # v3
+            src.expire_versions(keep_last=1)
+            assert view.refresh() == 3
+            assert view._applied_txn() == 3
 
 
 class TestIvmTwoCommitWindow:
